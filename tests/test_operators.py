@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from wdd.config import WddConfig
 from wdd.operators.components import connected_components
 from wdd.operators.pairs import (canonicalize_pairs, dedup_pairs,
-                                 pairs_from_groups)
+                                 pairs_from_groups, release_stage_caches)
 from wdd.operators.pigeonhole import pigeonhole_candidates
 from wdd.operators.dedup import exact_dup_edges
 
@@ -82,6 +82,55 @@ def test_connected_components_chain_converges(spark):
     assert res.converged
     labels = {r.id: r.cluster_id for r in res.labels.collect()}
     assert set(labels.values()) == {0}
+
+
+def test_connected_components_keeps_callers_caches(spark):
+    """CC frees only the checkpoints it made: a frame the caller persisted,
+    first computed inside the CC loop, keeps its cache RDD afterwards."""
+    edges = spark.range(0, 60).select(
+        (F.col("id") % 17).alias("a"), ((F.col("id") * 7) % 23).alias("b"))
+    edges = edges.persist()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    try:
+        connected_components(edges, cache_token="cc-own-caches")
+        builder = cm.lookupCachedData(edges._jdf).get() \
+            .cachedRepresentation().cacheBuilder()
+        assert builder.isCachedColumnBuffersLoaded()
+        rdd_id = builder.cachedColumnBuffers().id()
+        assert spark.sparkContext._jsc.getPersistentRDDs() \
+            .containsKey(rdd_id), "CC unpersisted the caller's cache"
+    finally:
+        release_stage_caches("cc-own-caches")
+        edges.unpersist()
+
+
+def test_tokenless_connected_components_pins_nothing(spark):
+    """With no cache_token CC keeps its checkpoints in a private scope: the
+    shared None scope gains no frames, so nothing outlives the result."""
+    from wdd.scope import scope_for
+    held = scope_for(None)._held
+    before = len(held)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["a", "b"])
+    for _ in range(2):
+        labels = connected_components(edges).labels
+        assert labels.select("cluster_id").distinct().count() == 2
+    assert len(held) == before
+
+
+def test_verify_substring_pairs_registers_its_candidate_cache(spark):
+    """The precise verify leg persists its candidate frame for the sizing
+    count and the verify join; that cache belongs to the caller's scope."""
+    from wdd.operators.substring import verify_substring_pairs
+    jsc = spark.sparkContext._jsc
+    docs = spark.createDataFrame(
+        [(1, "abc " * 40), (2, "abc " * 40)], ["id", "text"])
+    cand = spark.createDataFrame([(1, 2, "substring")], ["a", "b", "source"])
+    before = jsc.getPersistentRDDs().size()
+    out = verify_substring_pairs(cand, docs, "id", "text", min_len=50,
+                                 cache_token="verify-scope")
+    assert [(r.a, r.b) for r in out.collect()] == [(1, 2)]
+    assert release_stage_caches("verify-scope") == 1
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_substring_stage_end_to_end(spark):

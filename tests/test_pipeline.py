@@ -265,32 +265,61 @@ def test_embedding_only_duplicates_cluster(spark, sf_dir):
 
 
 def test_interleaved_pipelines_keep_their_caches(spark, sf_dir):
-    """VERDICT r4 #6: the pair-stage cache registry is keyed per pipeline
-    run — an eager run releasing its caches must NOT unpin a concurrently
-    in-flight (lazy) run's exploded tables."""
-    from wdd.operators import pairs as pairmod
+    """VERDICT r4 #6: every pipeline run owns its own cache scope — an
+    eager run releasing its caches must NOT unpin a concurrently in-flight
+    (lazy) run's exploded tables."""
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     small = pages.limit(120)
-    before = set(pairmod._PERSISTED)
     # pipeline B constructs lazily: its candidate stages pin caches now,
     # its final action runs later
     resB = run_dedup_pipeline(spark, small, eager_stages=False)
-    tokens_b = [t for t in pairmod._PERSISTED if t not in before]
-    assert len(tokens_b) == 1 and tokens_b[0].startswith("pipeline-")
-    frames_b = list(pairmod._PERSISTED[tokens_b[0]])
-    assert frames_b
-    # pipeline A runs eagerly to completion and releases ITS token only
+    frames_b = resB.scope.persisted
+    def ckpts_b():
+        return [r for _, r in resB.scope._held.values() if r is not None]
+    assert frames_b and ckpts_b()
+    # pipeline A runs eagerly to completion and releases ITS scope only
     run_dedup_pipeline(spark, small, eager_stages=True)
-    assert tokens_b[0] in pairmod._PERSISTED
     assert all(df.storageLevel.useMemory for df in frames_b), \
         "A's release unpinned B's in-flight caches"
+    assert len(ckpts_b()) >= 4  # B's near-dup edge frames
     # B still completes; the PUBLIC release surface (round-5 ADVICE) frees
     # exactly B's caches
     assert resB.clusters.count() > 0
-    assert resB.cache_token == tokens_b[0]
     assert resB.release() > 0
     assert not any(df.storageLevel.useMemory for df in frames_b)
     assert resB.release() == 0  # idempotent
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_release_returns_persistent_rdds_to_their_count_before_the_run(
+        spark, sf_dir, eager):
+    """Every cache and checkpoint a run makes — stage frames, operator
+    tables, CC's checkpoints — belongs to its scope, so release() leaves
+    the session's persistent RDDs exactly as the run found them."""
+    jsc = spark.sparkContext._jsc
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    before = jsc.getPersistentRDDs().size()
+    res = run_dedup_pipeline(spark, pages.limit(150), eager_stages=eager)
+    res.clusters.write.format("noop").mode("overwrite").save()
+    assert jsc.getPersistentRDDs().size() > before
+    assert res.release() > 0
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_frames_fail_fast_after_release(spark, sf_dir):
+    """A released result refuses to hand out its frames (their checkpoint
+    blocks are gone) instead of failing mid-job on a missing block, and a
+    release before the first action leaves no persistent RDD behind."""
+    jsc = spark.sparkContext._jsc
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    before = jsc.getPersistentRDDs().size()
+    res = run_dedup_pipeline(spark, pages.limit(120), eager_stages=False)
+    assert res.release() > 0
+    assert jsc.getPersistentRDDs().size() == before
+    for name in ("pages", "signatures", "simhashes", "candidate_pairs",
+                 "clusters"):
+        with pytest.raises(RuntimeError, match=r"release\(\)"):
+            getattr(res, name)
 
 
 def test_flagship_computes_content_digest_exactly_once(spark, sf_dir):

@@ -30,6 +30,14 @@ class StageRecord:
 
 @dataclass
 class MetricsCollector:
+    """Stage records of one pipeline run, in completion order.
+
+    The four near-dup edge stages (edges_lsh, edges_pigeonhole,
+    edges_embedding, edges_substring) are built by concurrent driver
+    threads, so their wall_ms values overlap: each covers roughly the
+    shared wall of the concurrent block, their sum exceeds the pipeline's
+    wall, and their record order varies run to run. Key records by stage
+    name; do not sum or order their walls."""
     records: list[StageRecord] = field(default_factory=list)
     observations: dict = field(default_factory=dict)   # stage -> Observation
 
@@ -80,6 +88,9 @@ class MetricsCollector:
 
 
 class stage_timer:
+    """Wall time of one stage from __enter__ to done(). Timers of stages
+    that run in concurrent threads overlap (see MetricsCollector)."""
+
     def __init__(self, collector: MetricsCollector | None, stage: str):
         self.collector, self.stage = collector, stage
         self.t0 = 0.0

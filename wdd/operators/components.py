@@ -17,6 +17,10 @@ measured 15+ rounds on the sf0.1 near-dup graph vs 4-6 here).
 
 Every round localCheckpoints the edge list to cut lineage (SURVEY.md §4.3);
 convergence = small-star output identical to its input (count + exceptAll).
+Both functions track their own checkpoints in a RunScope (wdd.scope) and
+free the ones a later round supersedes. connected_components leaves its
+last ones to the scope of `cache_token`, or, with no token, to garbage
+collection with the result.
 """
 
 from __future__ import annotations
@@ -26,36 +30,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from wdd.scope import RunScope, scope_for
+
 
 @dataclass
 class CCResult:
     labels: DataFrame      # (id, cluster_id)
     iterations: int
     converged: bool
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    """Ids of RDDs currently pinned in the block manager (checkpoint blocks
-    included). py4j-surface dependent; degrades to 'no cleanup' if absent."""
-    try:
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    except Exception:
-        return set()
-
-
-def _unpersist_rdds(sc, ids: set[int]) -> None:
-    """Drop superseded per-round localCheckpoint blocks. Each CC round only
-    reads the PREVIOUS round's checkpoint, so once round r is materialized,
-    blocks from rounds < r are dead — without this, long runs accumulate
-    blocks until eviction pressure (round-1 ADVICE)."""
-    try:
-        m = sc._jsc.getPersistentRDDs()
-        for i in ids:
-            r = m.get(i)
-            if r is not None:
-                r.unpersist(False)
-    except Exception:
-        pass
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -85,7 +67,8 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
                          max_iter: int = 25,
-                         rounds_per_sync: int = 2) -> CCResult:
+                         rounds_per_sync: int = 2,
+                         cache_token: str | None = None) -> CCResult:
     """edges: (a, b) long ids; vertices: optional (id) frame for isolated
     nodes. Returns every vertex labeled with cluster_id = its component min.
 
@@ -102,13 +85,14 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     the fixpoint may be reached partway through a chained sync. max_iter
     bounds sync points, so at most rounds_per_sync * max_iter contractions
     run."""
-    sc = edges.sparkSession.sparkContext
-    baseline = _persistent_rdd_ids(sc)
-    e = (edges.select(F.col("a").cast("long").alias("a"),
-                      F.col("b").cast("long").alias("b"))
-         .where(F.col("a") != F.col("b"))
-         .dropDuplicates(["a", "b"])
-         .localCheckpoint(eager=False))  # materialized by the first _signature
+    # tokenless: a private scope, so the result's checkpoints stay
+    # unreferenced and Spark's ContextCleaner frees them once it is dropped
+    scope = RunScope(None) if cache_token is None else scope_for(cache_token)
+    e = scope.checkpoint(  # materialized by the first _signature
+        edges.select(F.col("a").cast("long").alias("a"),
+                     F.col("b").cast("long").alias("b"))
+        .where(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"]))
 
     def _signature(edges_df) -> tuple:
         """Order-insensitive edge-set fingerprint in ONE cheap aggregate
@@ -130,7 +114,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
         # materializes the checkpoint — one Spark job per sync instead of
         # two (each sync is driver-synchronized, so saved jobs are saved
         # serial time; measured ~0.2s/round on an idle scheduler)
-        superseded = _persistent_rdd_ids(sc) - baseline
+        chain = []
         e2 = e
         for _ in range(rounds_per_sync):
             # localCheckpoint after EVERY star contraction, not once per
@@ -143,13 +127,15 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
             # one-star deep: sync build 1.7 s -> 0.8 s, action 0.12 ->
             # 0.07 s on a 20k-edge graph. Shuffle volume is unchanged;
             # the extra checkpoint stores one intermediate edge list per
-            # contraction (16 B/row), released by the per-sync cleanup.
+            # contraction (16 B/row), dropped once the sync ends.
             # All checkpoints are eager=False: the signature aggregate
             # below materializes the whole chain in ONE job.
-            e2 = _large_star(e2).localCheckpoint(eager=False)
-            e2 = _small_star(e2).localCheckpoint(eager=False)
-        sig = _signature(e2)            # materializes e2's checkpoint...
-        _unpersist_rdds(sc, superseded)  # ...making every prior sync's dead
+            e2 = scope.checkpoint(_large_star(e2))
+            chain.append(e2)
+            e2 = scope.checkpoint(_small_star(e2))
+            chain.append(e2)
+        sig = _signature(e2)       # materializes e2's checkpoint, which
+        scope.drop(e, *chain[:-1])  # cuts the lineage: the rest are dead
         e = e2
         iterations = sync * rounds_per_sync
         if sig == prev_sig:
@@ -195,17 +181,16 @@ def hash_min_components(edges: DataFrame, vertices: DataFrame | None = None,
                       F.col("b").cast("long").alias("b"))
          .where(F.col("a") != F.col("b"))
          .dropDuplicates(["a", "b"]))
-    sym = (e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .union(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-           .localCheckpoint(eager=True))
-    labels = (sym.select("u").union(sym.select(F.col("v").alias("u")))
-              .dropDuplicates(["u"])
-              .withColumn("label", F.col("u"))
-              .localCheckpoint(eager=True))
-    # baseline AFTER sym/labels: those live for every round and must never
-    # be dropped; only superseded per-round label checkpoints are released
-    sc = edges.sparkSession.sparkContext
-    baseline = _persistent_rdd_ids(sc)
+    scope = RunScope(None)  # the final labels go to garbage collection
+    sym = scope.checkpoint(
+        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .union(e.select(F.col("b").alias("u"), F.col("a").alias("v"))),
+        eager=True)
+    labels = scope.checkpoint(
+        sym.select("u").union(sym.select(F.col("v").alias("u")))
+        .dropDuplicates(["u"])
+        .withColumn("label", F.col("u")),
+        eager=True)
 
     def _label_sum(lab) -> tuple:
         row = lab.select(
@@ -220,17 +205,18 @@ def hash_min_components(edges: DataFrame, vertices: DataFrame | None = None,
         # neighbor minima: one groupBy over (edge ⋈ label); self included
         nbr_min = (sym.join(labels.withColumnRenamed("u", "v"), "v")
                    .groupBy("u").agg(F.min("label").alias("nbr")))
-        superseded = _persistent_rdd_ids(sc) - baseline
-        labels = (labels.join(nbr_min, "u", "left")
-                  .select("u", F.least("label", F.coalesce("nbr", "label"))
-                          .alias("label"))
-                  .localCheckpoint(eager=False))
-        cur = _label_sum(labels)         # materializes the new checkpoint
-        _unpersist_rdds(sc, superseded)  # prior rounds' label blocks are dead
+        new = scope.checkpoint(
+            labels.join(nbr_min, "u", "left")
+            .select("u", F.least("label", F.coalesce("nbr", "label"))
+                    .alias("label")))
+        cur = _label_sum(new)  # materializes the new checkpoint, so the
+        scope.drop(labels)     # prior round's label blocks are dead
+        labels = new
         if cur == prev:
             converged = True
             break
         prev = cur
+    scope.drop(sym)  # the last labels checkpoint no longer reads it
 
     labels = labels.select(F.col("u").alias("id"), F.col("label"))
     if vertices is not None:

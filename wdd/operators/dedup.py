@@ -3,8 +3,8 @@
 The reference's single most important optimization is its per-task digest memo
 (`self.seen`, discover.py:160-163,183): a capture whose content digest was
 already processed reuses the simhash instead of re-downloading/re-hashing.
-The bulk-form equivalent here is `distinct_by_digest` + `attach_by_digest`:
-compute the expensive UDF columns once per distinct digest, then join back.
+The bulk-form equivalent (wdd.pipeline) computes the expensive UDF columns
+once per distinct digest, then joins them back on the digest.
 Catalyst does not dedup UDF work on its own (SURVEY.md §4 O4), so this rewrite
 is expressed explicitly in the plan.
 
@@ -42,18 +42,6 @@ def with_page_id(pages: DataFrame, out_col: str = "page_id") -> DataFrame:
         out_col,
         F.xxhash64("url", F.date_format("warc_ts", "yyyyMMddHHmmss")),
     )
-
-
-def distinct_by_digest(pages: DataFrame, digest_col: str = "digest",
-                       payload_cols: tuple[str, ...] = ("text",)) -> DataFrame:
-    """One representative row per distinct content digest (A6 bulk form)."""
-    return pages.select(digest_col, *payload_cols).dropDuplicates([digest_col])
-
-
-def attach_by_digest(pages: DataFrame, computed: DataFrame,
-                     digest_col: str = "digest") -> DataFrame:
-    """Join per-digest computed columns back onto the full pages set."""
-    return pages.join(computed, on=digest_col, how="left")
 
 
 def exact_dup_edges(df: DataFrame, key_col: str, id_col: str = "page_id") -> DataFrame:

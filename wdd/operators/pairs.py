@@ -19,86 +19,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wdd.config import DEFAULT
-
-# Exploded tables pinned by pairs_from_groups_scalable, awaiting release.
-# The function returns a LAZY frame, so it cannot unpersist its own input;
-# the consumer (wdd.pipeline, or any caller that materializes the pairs)
-# calls release_stage_caches() once the pair frame is materialized so the
-# block-manager memory stops competing with shuffle memory for the rest of
-# the job (round-1 verdict "What's wrong" #5). The registry is keyed by a
-# caller-supplied token (round-4 verdict wrong #3): each pipeline run pins
-# under its own token and releases ONLY that token's caches, so pipelines
-# interleaving in one session (the serving-concurrency story) never
-# release each other's in-flight caches. Callers that pass no token share
-# the None bucket — fine for one-shot queries.
-_PERSISTED: dict[str | None, list[DataFrame]] = {}
-_CHECKPOINTED: dict[str | None, list[DataFrame]] = {}
-
-
-def register_stage_checkpoint(cache_token: str | None,
-                              df: DataFrame) -> DataFrame:
-    """Track a localCheckpoint(eager=False) frame under `cache_token` so
-    release_stage_caches() can drop its blocks too: DataFrame.unpersist()
-    does not reach checkpoint RDDs, so the LogicalRDD's underlying rdd is
-    unpersisted directly (py4j-surface dependent; degrades to leaving the
-    blocks, exactly the pre-round-7 behavior for CC's final sync)."""
-    _CHECKPOINTED.setdefault(cache_token, []).append(df)
-    return df
-
-
-def register_stage_cache(cache_token: str | None, df: DataFrame) -> DataFrame:
-    """Pin an already-persisted frame under `cache_token` so a later
-    release_stage_caches(cache_token) unpersists it. Used by the lazy
-    pipeline path for the frames it persists itself (prepped, sigs, reps,
-    emb_reps, ...), so deferred runs can be fully released through
-    PipelineResult.release() instead of leaking for the session lifetime."""
-    _PERSISTED.setdefault(cache_token, []).append(df)
-    return df
+from wdd.scope import scope_for
 
 
 def release_stage_caches(cache_token: str | None = None) -> int:
-    """Unpersist the exploded tables AND checkpointed stage frames pinned
-    under `cache_token` (None = the shared default bucket). Persisted
-    frames merely recompute if re-used; checkpointed frames (see
-    register_stage_checkpoint) have truncated lineage, so the token's
-    result frames must not be re-executed after release. Intended call
-    site: once the run's final frames are materialized and consumed."""
-    n = 0
-    bucket = _PERSISTED.pop(cache_token, [])
-    while bucket:
-        bucket.pop().unpersist()
-        n += 1
-    ckpts = _CHECKPOINTED.pop(cache_token, [])
-    while ckpts:
-        try:
-            ckpts.pop()._jdf.queryExecution().analyzed().rdd() \
-                .unpersist(False)
-            n += 1
-        except Exception:
-            continue
-    return n
-
-
-def pair_expansion_expr(ids_col: str, cap: int) -> Column:
-    """Array<long> (sorted, distinct) -> array<struct<a:long, b:long>>.
-
-    size<=cap  -> all unordered pairs (a<b);
-    size> cap  -> star edges (min, x) + chain edges (x_i, x_i+1).
-    Pure Catalyst expression: runs inside whole-stage codegen, no Python.
-    """
-    all_pairs = (
-        f"flatten(transform({ids_col}, (x, i) -> "
-        f"  transform(slice({ids_col}, i + 2, size({ids_col}) - i - 1), "
-        f"            y -> struct(x as a, y as b))))"
-    )
-    star = (f"transform(slice({ids_col}, 2, size({ids_col}) - 1), "
-            f"          y -> struct({ids_col}[0] as a, y as b))")
-    chain = (f"transform(slice({ids_col}, 2, size({ids_col}) - 1), "
-             f"          (y, i) -> struct({ids_col}[i] as a, y as b))")
-    return F.expr(
-        f"CASE WHEN size({ids_col}) <= {cap} THEN {all_pairs} "
-        f"ELSE array_union({star}, {chain}) END"
-    )
+    """Release the run scope registered under `cache_token` (None = the
+    shared scope of callers that pass no token): its persisted tables and
+    checkpointed frames. Frames it checkpointed must not be read again."""
+    return scope_for(cache_token).release()
 
 
 # Loud-failure ceiling for the huge_group_rows=None caller guarantee: a
@@ -125,21 +53,20 @@ def pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str,
         .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
         .where(F.size("ids") >= 2)
     )
-    # STREAMED expansion (round-7, guide §5 — bound per-task memory): the
-    # old single-expression form (pair_expansion_expr) materialized ALL
-    # C(n,2) pair structs of a group as ONE in-memory array before its
-    # explode — a group of 2,941 anchor-sharing docs (sf1.0's planted
-    # substring block) built a 4.3M-struct array per group row and OOM'd an
-    # 8g heap. Two nested Generates emit the same pair set with per-row
-    # memory bounded by ONE partner slice (<= n ids): posexplode the member
-    # list, then per member x at 0-based position i emit
+    # STREAMED expansion (round-7, guide §5 — bound per-task memory): a
+    # single-expression form materialized ALL C(n,2) pair structs of a
+    # group as ONE in-memory array before its explode — a group of 2,941
+    # anchor-sharing docs (sf1.0's planted substring block) built a
+    # 4.3M-struct array per group row and OOM'd an 8g heap. Two nested
+    # Generates emit the same pair set with per-row memory bounded by ONE
+    # partner slice (<= n ids): posexplode the member list, then per
+    # member x at 0-based position i emit
     #   size<=cap : slice(ids, i+2, n-i-1)          (all y > x)
     #   size> cap : i==0 -> slice(ids, 2, n-1)      (star from the min)
     #               else -> [ids[i+1]]              (chain edge)
     # — identical to all-pairs / array_union(star, chain): star covers
     # (ids[0], ids[1]), chain rows start at i>=1, ids are sorted-distinct
-    # so no duplicates arise. pair_expansion_expr remains for small
-    # bounded-group callers.
+    # so no duplicates arise.
     rows = grouped.select("ids", F.posexplode("ids").alias("_i", "_x"))
     partners = F.when(
         F.size("ids") <= cap,
@@ -199,8 +126,9 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
     guarantee fails loudly instead of silently concentrating one reducer.
     At unknown scale, keep huge_group_rows set.
 
-    cache_token scopes the pinned exploded table in the release registry —
-    see _PERSISTED above.
+    The pinned exploded table is released with the run scope of
+    `cache_token` (wdd.scope); the returned frame is lazy, so it cannot
+    unpersist its own input.
     """
     if huge_group_rows is None:
         # the guarantee is now VERIFIED in-line: a violating mega-group
@@ -213,8 +141,8 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
     # (measured ~2x on the LSH stage). persist(), not localCheckpoint: the
     # cache must stay EVICTABLE — pinning 30M-row exploded tables in the
     # block manager OOMed an 8-core 24g leg.
-    df = df.persist()
-    _PERSISTED.setdefault(cache_token, []).append(df)
+    scope = scope_for(cache_token)
+    df = scope.persist(df)
     sizes = (df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("_gsz"))
              .where(F.col("_gsz") > huge_group_rows))
 
@@ -224,7 +152,7 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
     # materialize only on the non-empty path: sizes feeds two consumers
     # below (the broadcast key set and the _gsz join); the common case —
     # no huge groups — never pays the checkpoint job
-    sizes = sizes.localCheckpoint(eager=True)
+    sizes = scope.checkpoint(sizes, eager=True)
 
     huge_keys = F.broadcast(sizes)
     small = df.join(huge_keys.select(*group_cols), group_cols, "left_anti")

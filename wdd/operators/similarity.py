@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from wdd.scope import scope_for
+
 _ANN_SEED = 1337
 
 
@@ -122,8 +124,7 @@ def cosine_dup_pairs(corpus: DataFrame, threshold: float,
     # twice). Persist the (id, codes) keys — tables longs per vector, the
     # lightweight proxy, never the vectors — evictable and released through
     # the caller's cache_token (the pipeline's run-scoped release).
-    from wdd.operators.pairs import register_stage_cache
-    keyed = register_stage_cache(cache_token, keyed.persist())
+    keyed = scope_for(cache_token).persist(keyed)
     # probe side: own code + every single-bit flip per table; build side:
     # own code only. Key rows are 3 longs — the vectors never ride this
     # shuffle. (t, bkt) is the equi-join key.

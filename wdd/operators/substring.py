@@ -32,6 +32,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from wdd.config import DEFAULT, WddConfig
 from wdd.operators.pairs import dedup_pairs, pairs_from_groups_scalable
+from wdd.scope import scope_for
 
 _B = np.uint64(1000003)  # odd polynomial base; arithmetic wraps mod 2^64
 
@@ -242,16 +243,18 @@ def verify_bucket_count(n_pairs: int, parallelism: int,
 def verify_substring_pairs(pairs: DataFrame, docs: DataFrame,
                            id_col: str, text_col: str,
                            min_len: int,
-                           n_buckets: int | None = None) -> DataFrame:
+                           n_buckets: int | None = None,
+                           cache_token: str | None = None) -> DataFrame:
     """Join both texts, compute exact LCS length per pair in applyInPandas
     batches, keep pairs with overlap >= min_len. Score = overlap length.
 
     n_buckets=None sizes the pair buckets from the actual candidate count
     (one count job over the persisted candidate frame — the verify leg
-    re-reads it anyway)."""
+    re-reads it anyway); the persisted frame is released with the run
+    scope of `cache_token`."""
     if n_buckets is None:
         # persist: the frame feeds both the sizing count and the verify join
-        pairs = pairs.persist()
+        pairs = scope_for(cache_token).persist(pairs)
         n_buckets = verify_bucket_count(
             pairs.count(),
             pairs.sparkSession.sparkContext.defaultParallelism)
@@ -293,6 +296,7 @@ def substring_candidates(docs: DataFrame, id_col: str = "id",
                              cache_token=cache_token)
     if precise:
         return verify_substring_pairs(cand, docs, id_col, text_col,
-                                      cfg.min_overlap_chars)
+                                      cfg.min_overlap_chars,
+                                      cache_token=cache_token)
     return cand.withColumn("score",
                            F.lit(float(cfg.min_overlap_chars)))

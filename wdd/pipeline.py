@@ -18,8 +18,6 @@ Design invariants:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -32,34 +30,46 @@ from wdd.operators import lsh as L
 from wdd.operators import pigeonhole as P
 from wdd.operators.components import connected_components
 from wdd.operators.substring import substring_candidates
+from wdd.scope import _SCOPES, RunScope
 
 
-@dataclass
+def _frame(name: str) -> property:
+    def get(self) -> DataFrame:
+        if self.scope.released:
+            raise RuntimeError(f"PipelineResult.{name} read after "
+                               f"release(): its checkpoints are gone")
+        return self._frames[name]
+    return property(get)
+
+
 class PipelineResult:
-    pages: DataFrame            # + digest, page_id
-    signatures: DataFrame       # per-digest: digest, text, simhash64, signature
-    simhashes: DataFrame        # page-level: url, warc_ts, digest, page_id, simhash64
-    candidate_pairs: DataFrame  # a, b (page_id), source, score
-    clusters: DataFrame         # page_id, url, warc_ts, cluster_id
-    metrics: MetricsCollector
-    cc_iterations: int = 0
-    cc_converged: bool = True
-    # the run's cache scope: deferred runs (eager_stages=False, store=None)
-    # pin their shared frames + exploded candidate tables under this token;
-    # call release() once the final frames are materialized (round-5 ADVICE:
-    # without it, long-lived serving sessions leak pinned persists)
-    cache_token: str | None = None
+    """The run's frames, metrics and the RunScope that owns every cache and
+    checkpoint the run made. Call release() once the frames are no longer
+    needed; reading a frame after that raises instead of failing mid-job on
+    a dropped checkpoint block.
+
+      pages            + digest, page_id
+      signatures       per-digest: digest, text, simhash64, signature
+      simhashes        page-level: url, warc_ts, digest, page_id, simhash64
+      candidate_pairs  a, b (page_id), source, score
+      clusters         page_id, url, warc_ts, cluster_id
+    """
+    pages = _frame("pages")
+    signatures = _frame("signatures")
+    simhashes = _frame("simhashes")
+    candidate_pairs = _frame("candidate_pairs")
+    clusters = _frame("clusters")
+
+    def __init__(self, frames: dict[str, DataFrame], metrics: MetricsCollector,
+                 scope: RunScope, cc_iterations: int = 0,
+                 cc_converged: bool = True):
+        self._frames, self.metrics, self.scope = frames, metrics, scope
+        self.cc_iterations, self.cc_converged = cc_iterations, cc_converged
 
     def release(self) -> int:
-        """Unpersist every cache this run pinned (lazy path). Idempotent;
-        returns the number of frames released. Call it when the run's
-        results are no longer needed: persisted frames merely recompute on
-        a later action, but the lazily CHECKPOINTED candidate stages lose
-        their blocks without a lineage to rebuild them, so re-executing
-        this result's frames after release() fails. (Every in-repo caller
-        — bench, tests, profilers — releases at end-of-use.)"""
-        from wdd.operators.pairs import release_stage_caches
-        return release_stage_caches(self.cache_token)
+        """Drop every cache and checkpoint this run made. Idempotent;
+        returns the number of frames released."""
+        return self.scope.release()
 
 
 def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
@@ -75,47 +85,30 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     (per-stage wall metrics then cover only plan construction)."""
     import uuid
     metrics = MetricsCollector()
-    # per-run cache scope: candidate stages pin their exploded tables under
-    # this token, and only THIS run's release below unpins them — pipelines
-    # interleaving in one session never release each other's caches
-    # (round-4 verdict wrong #3)
-    cache_token = f"pipeline-{uuid.uuid4().hex}"
+    # the run's scope owns every cache and checkpoint below, and the
+    # candidate operators register theirs under its token: only THIS run's
+    # release() unpins them, so pipelines interleaving in one session never
+    # release each other's caches (round-4 verdict wrong #3)
+    token = f"pipeline-{uuid.uuid4().hex}"
+    scope = _SCOPES[token] = RunScope(token, eager_stages)
 
-    def mat(name: str, df: DataFrame, t: stage_timer,
-            shared: bool = False, ckpt: bool = False) -> DataFrame:
+    def mat(name: str, df: DataFrame, t: stage_timer, keep=None) -> DataFrame:
+        """Materialize stage `name` through the store, or else through the
+        run scope (`keep`: see RunScope.materialize). An eager stage is
+        counted here; a lazy stage's rows ride the eventual action as an
+        observe() side-car (harvest with metrics.harvest_observations()
+        after acting)."""
         if store is not None:
             out = store.materialize(name, df)
             m = store.manifest(name)
             t.done(m["rows"], m["partitions"], str(store._dir(name)))
             return out
-        if not eager_stages:
-            # rows_out rides the eventual action as an observe() side-car
-            # (harvest with metrics.harvest_observations() after acting)
-            df = metrics.observe(name, df)
-            if shared:
-                from wdd.operators.pairs import register_stage_cache
-                out = register_stage_cache(cache_token, df.persist())
-            elif ckpt:
-                # localCheckpoint(eager=False): adds NO job, but its toRdd
-                # call plans the stage's lineage HERE — inside this stage's
-                # concurrently-running builder thread — and hands every
-                # consumer an RDD leaf. Without it the candidate-union tree
-                # (six edge lineages) was Catalyst-planned SERIALLY at the
-                # CC entry checkpoint: a measured 4.1-6.9 s per headline
-                # rep. Only the four near-dup edge frames opt in (deep
-                # plans, few rows — verified candidate pairs); exact and
-                # samesim stay streaming (shallow plans, page-scale rows,
-                # so an extra materialized copy would cost real memory).
-                # Blocks are released through the run's cache_token.
-                from wdd.operators.pairs import register_stage_checkpoint
-                out = register_stage_checkpoint(
-                    cache_token, df.localCheckpoint(eager=False))
-            else:
-                out = df
+        out = scope.materialize(
+            df if scope.eager else metrics.observe(name, df), keep)
+        if scope.eager:
+            t.done(out.count(), out.rdd.getNumPartitions())
+        else:
             t.done(-1, -1)
-            return out
-        out = df.localCheckpoint(eager=True)
-        t.done(out.count(), out.rdd.getNumPartitions())
         return out
 
     # -- stage: prep (digest + page identity; narrow, no shuffle) ----------
@@ -131,7 +124,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     with stage_timer(metrics, "prep") as t:
         prepped = D.with_page_id(D.with_digest(pages, content_col=content_col)) \
             .select("url", "warc_ts", "digest", "page_id", content_col)
-        prepped = mat("prep", prepped, t, shared=True)
+        prepped = mat("prep", prepped, t, scope.persist)
 
     # The expensive-UDF stages must stay wide: AQE coalesces the small
     # dropDuplicates shuffle to 1 partition on small inputs, which would
@@ -162,8 +155,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
         if use_precomputed_text:
             feats = prepped.select("digest", "text") \
                 .dropDuplicates(["digest"]).repartition(udf_parallelism)
-            feats = feats.localCheckpoint(eager=True) if eager_stages \
-                else feats.persist()
+            feats = scope.materialize(feats, scope.persist)
             sim_expr = (udfs.make_simhash_parts_text_udf(
                 cfg.simhash_size, cfg.simhash_hash)("text") if wide
                 else udfs.simhash64_text_udf("text"))
@@ -181,7 +173,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                 .select("digest", F.col("x.text").alias("text"),
                         F.col(f"x.{sim_col}").alias(sim_col),
                         F.col("x.signature").alias("signature"))
-        sigs = mat("signatures", sigs, t, shared=True)
+        sigs = mat("signatures", sigs, t, scope.persist)
 
     # -- stage: page-level simhashes table (join back on digest). Only the
     # 8-byte simhash64 rides the page-level shuffle: the 128-int minhash
@@ -195,7 +187,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
         simhashes = prepped.select("url", "warc_ts", "digest", "page_id").join(
             sigs.select("digest", sim_col).hint("shuffle_hash"),
             "digest")
-        simhashes = mat("simhashes", simhashes, t, shared=True)
+        simhashes = mat("simhashes", simhashes, t, scope.persist)
 
     # digest representative page (min page_id) — candidate graph runs on
     # reps. The rep id comes from a NARROW (digest, page_id) aggregate over
@@ -206,11 +198,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     reps = rep_ids.join(
         sigs.select("digest", sim_col, "signature").hint("shuffle_hash"),
         "digest")
-    if eager_stages:
-        reps = reps.localCheckpoint(eager=True)
-    else:
-        from wdd.operators.pairs import register_stage_cache
-        reps = register_stage_cache(cache_token, reps.persist())
+    reps = scope.materialize(reps, scope.persist)
 
     # -- stage: exact-duplicate star edges (J3) ------------------------------
     with stage_timer(metrics, "edges_exact") as t:
@@ -243,34 +231,45 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             .select("a", "b", "source", "score")
         samesim_edges = mat("edges_samesim", samesim_edges, t)
 
+    # The four near-dup edge frames are kept with scope.checkpoint: in a
+    # lazy scope, localCheckpoint(eager=False) adds NO job, but its toRdd
+    # call plans the stage's lineage HERE — inside the stage's
+    # concurrently-running builder thread — and hands every consumer an RDD
+    # leaf. Without it the candidate-union tree (six edge lineages) was
+    # Catalyst-planned SERIALLY at the CC entry checkpoint: a measured
+    # 4.1-6.9 s per headline rep. Only these four opt in (deep plans, few
+    # rows — verified candidate pairs); exact and samesim stay streaming
+    # (shallow plans, page-scale rows, so an extra materialized copy would
+    # cost real memory).
+
     # -- stage: LSH band candidates + Jaccard verification (J1, J5) --------
     def _lsh_stage() -> DataFrame:
         with stage_timer(metrics, "edges_lsh") as t:
             lsh_cand = L.lsh_candidates(nd_reps, id_col="rep",
                                         sig_col="signature",
-                                        cfg=cfg, cache_token=cache_token)
+                                        cfg=cfg, cache_token=token)
             lsh_edges = L.verify_jaccard(
                 lsh_cand, reps.select("rep", "signature"),
                 id_col="rep", sig_col="signature",
                 threshold=cfg.jaccard_threshold,
             ).select("a", "b", "source", "score")
-            return mat("edges_lsh", lsh_edges, t, ckpt=True)
+            return mat("edges_lsh", lsh_edges, t, scope.checkpoint)
 
     # -- stage: Hamming pigeonhole candidates (J2) --------------------------
     def _pigeonhole_stage() -> DataFrame:
         with stage_timer(metrics, "edges_pigeonhole") as t:
             sim_pairs = (P.pigeonhole_candidates_parts(
                             nd_reps, parts_col=sim_col, cfg=cfg,
-                            cache_token=cache_token) if wide
+                            cache_token=token) if wide
                          else P.pigeonhole_candidates(
                             nd_reps, id_col=sim_col, cfg=cfg,
-                            cache_token=cache_token))
+                            cache_token=token))
             ph_edges = P.simhash_pairs_to_page_pairs(
                 sim_pairs, nd_reps, id_col="rep", sim_col=sim_col
             ).withColumn(
                 "score", F.lit(None).cast("double")
             ).select("a", "b", "source", "score")
-            return mat("edges_pigeonhole", ph_edges, t, ckpt=True)
+            return mat("edges_pigeonhole", ph_edges, t, scope.checkpoint)
 
     # -- stage: embedding-cosine candidates (optional — semantic/paraphrase
     # duplicates invisible to every token-level source). Activates when the
@@ -305,12 +304,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             # cosine_dup_pairs reads the corpus three times (bucket keys +
             # both verification sides) — pin it so the join/groupBy chain
             # above runs once
-            if eager_stages:
-                emb_reps = emb_reps.localCheckpoint(eager=True)
-            else:
-                from wdd.operators.pairs import register_stage_cache
-                emb_reps = register_stage_cache(cache_token,
-                                                emb_reps.persist())
+            emb_reps = scope.materialize(emb_reps, scope.persist)
             if embedding_dim is None:
                 # plan-time constant (one narrow limit-1 scan of the raw
                 # pages, same class as the ledger/convergence aggregates) —
@@ -333,12 +327,13 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                 emb_edges = cosine_dup_pairs(
                     emb_reps, threshold=cfg.cosine_dup_threshold,
                     id_col="rep", vec_col="embedding", method="lsh",
-                    dim=embedding_dim, bits=bits, cache_token=cache_token,
+                    dim=embedding_dim, bits=bits, cache_token=token,
                 ).select(
                     F.col("vec_a").alias("a"), F.col("vec_b").alias("b"),
                     F.lit("embedding").alias("source"),
                     F.col("cosine").alias("score"))
-                emb_edges = mat("edges_embedding", emb_edges, t, ckpt=True)
+                emb_edges = mat("edges_embedding", emb_edges, t,
+                                scope.checkpoint)
         return emb_edges
 
     # -- stage: substring-overlap candidates (anchor hashing) ---------------
@@ -349,9 +344,9 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                 .repartition(udf_parallelism)
             sub_edges = substring_candidates(
                 rep_texts, id_col="id", text_col="text", cfg=cfg,
-                cache_token=cache_token,
+                cache_token=token,
             ).select("a", "b", "source", "score")
-            return mat("edges_substring", sub_edges, t, ckpt=True)
+            return mat("edges_substring", sub_edges, t, scope.checkpoint)
 
     # The four near-dup candidate sources are independent given the shared
     # persisted frames (prep/sigs/reps/simhashes), but each blocks the
@@ -379,14 +374,14 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     emb_edges = results[2] if "embedding" in pages.columns else None
     sub_edges = results[-1] if enable_substring else None
 
-    # Candidate stages above pinned their exploded tables (pairs.py) for the
-    # sizing+pair double read; once the edge frames are materialized (eager
-    # path) those caches are dead weight competing with shuffle memory —
-    # release them. In the lazy path the edges materialize at the final
-    # actions, so the caches must outlive this function (evictable anyway).
-    if eager_stages or store is not None:
-        from wdd.operators.pairs import release_stage_caches
-        release_stage_caches(cache_token)
+    # Candidate stages above persisted their exploded tables (pairs.py) for
+    # the sizing+pair double read; once the edge frames are materialized
+    # (eager scope or store) those caches are dead weight competing with
+    # shuffle memory — drop them. In a lazy run the edges materialize at
+    # the final actions, so the caches must outlive this function
+    # (evictable anyway) and go with release().
+    if scope.eager or store is not None:
+        scope.drop(*scope.persisted)
 
     # -- stage: union candidate pairs ---------------------------------------
     with stage_timer(metrics, "candidate_pairs") as t:
@@ -402,7 +397,8 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             candidate_pairs = candidate_pairs.unionByName(p)
         candidate_pairs = candidate_pairs.groupBy("a", "b").agg(
             F.min("source").alias("source"), F.max("score").alias("score"))
-        candidate_pairs = mat("candidate_pairs", candidate_pairs, t, shared=True)
+        candidate_pairs = mat("candidate_pairs", candidate_pairs, t,
+                              scope.persist)
 
     # -- stage: connected components (J4) -----------------------------------
     # CC runs on the digest-representative graph ONLY: exact-dup star edges
@@ -417,7 +413,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
         rep_vertices = reps.select(F.col("rep").alias("id"))
         cc = connected_components(
             candidate_pairs.where(F.col("source") != "exact").select("a", "b"),
-            rep_vertices)
+            rep_vertices, cache_token=token)
         clusters = (
             simhashes.select("url", "warc_ts", "page_id", "digest")
             .join(reps.select("digest", "rep"), "digest")
@@ -427,11 +423,10 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
         clusters = mat("clusters", clusters, t)
 
     return PipelineResult(
-        pages=prepped, signatures=sigs, simhashes=simhashes,
-        candidate_pairs=candidate_pairs, clusters=clusters, metrics=metrics,
-        cc_iterations=cc.iterations, cc_converged=cc.converged,
-        cache_token=cache_token,
-    )
+        dict(pages=prepped, signatures=sigs, simhashes=simhashes,
+             candidate_pairs=candidate_pairs, clusters=clusters),
+        metrics, scope, cc_iterations=cc.iterations,
+        cc_converged=cc.converged)
 
 
 def build_simhash_index(simhashes: DataFrame,
