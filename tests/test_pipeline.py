@@ -275,13 +275,17 @@ def test_interleaved_pipelines_keep_their_caches(spark, sf_dir):
     resB = run_dedup_pipeline(spark, small, eager_stages=False)
     frames_b = resB.scope.persisted
     def ckpts_b():
-        return [r for _, r in resB.scope._held.values() if r is not None]
+        # B's near-dup edge frames (a, b, source, score); CC, finished on
+        # the driver, keeps no checkpoint of its own
+        return [r for df, r in resB.scope._held.values()
+                if r is not None and "source" in df.columns]
     assert frames_b and ckpts_b()
     # pipeline A runs eagerly to completion and releases ITS scope only
     run_dedup_pipeline(spark, small, eager_stages=True)
     assert all(df.storageLevel.useMemory for df in frames_b), \
         "A's release unpinned B's in-flight caches"
-    assert len(ckpts_b()) >= 4  # B's near-dup edge frames
+    # lsh, pigeonhole and substring: these pages carry no embeddings
+    assert len(ckpts_b()) >= 3
     # B still completes; the PUBLIC release surface (round-5 ADVICE) frees
     # exactly B's caches
     assert resB.clusters.count() > 0

@@ -174,11 +174,15 @@ def test_cc_sync_planning_stays_bounded(spark):
     assert leaves(unbroken(e, 2)) > 4 * leaves(unbroken(e, 1))
 
 
-def test_cc_labels_identical_across_checkpoint_cadence(spark):
+def test_cc_labels_identical_across_checkpoint_cadence(spark, monkeypatch):
     """§13 is a pure planning change: connected_components' labels must be
-    bit-identical to a cadence-free reference (hash_min_components)."""
+    bit-identical to a cadence-free reference (hash_min_components). The
+    graph is below components.DRIVER_EDGES, so the bound is patched to -1
+    to keep the contraction rounds (and their cadence) running."""
+    from wdd.operators import components
     from wdd.operators.components import (connected_components,
                                           hash_min_components)
+    monkeypatch.setattr(components, "DRIVER_EDGES", -1)
     e = (spark.range(0, 300)
          .select((F.col("id") % 97).alias("a"),
                  ((F.col("id") * 31) % 97 + 50).alias("b"))
@@ -186,7 +190,7 @@ def test_cc_labels_identical_across_checkpoint_cadence(spark):
     verts = spark.range(0, 160).select(F.col("id"))
     a = connected_components(e, verts)
     b = hash_min_components(e, verts)
-    assert a.converged and b.converged
+    assert a.converged and b.converged and a.iterations > 0
     assert sorted(map(tuple, a.labels.collect())) == \
         sorted(map(tuple, b.labels.collect()))
 
@@ -201,8 +205,12 @@ def test_lazy_pipeline_releases_checkpointed_edge_frames(spark, sf_dir):
     from wdd.sources.pages import synth_pages
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     res = run_dedup_pipeline(spark, pages.limit(150), eager_stages=False)
-    ckpts = [r for _, r in res.scope._held.values() if r is not None]
-    assert len(ckpts) >= 4, \
+    # edge frames are (a, b, source, score); CC, finished on the driver,
+    # keeps no checkpoint of its own. lsh, pigeonhole and substring: these
+    # pages carry no embeddings
+    ckpts = [r for df, r in res.scope._held.values()
+             if r is not None and "source" in df.columns]
+    assert len(ckpts) >= 3, \
         "lazy edge stages no longer register checkpoints"
     res.clusters.select("cluster_id").distinct().count()
     assert res.release() > 0

@@ -21,16 +21,31 @@ Both functions track their own checkpoints in a RunScope (wdd.scope) and
 free the ones a later round supersedes. connected_components leaves its
 last ones to the scope of `cache_token`, or, with no token, to garbage
 collection with the result.
+
+Driver finish: contraction is for graphs too big for one process. Once
+the edge list holds at most DRIVER_EDGES edges — at CC entry or after any
+sync — connected_components collects it once and labels it on the driver
+(numpy min-label hooking + pointer jumping), so a small graph costs two
+Spark jobs instead of four checkpointed contractions per sync. Every
+contraction preserves components and keeps each component's minimum, so
+finishing from any intermediate edge list gives the same labels.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wdd.scope import RunScope, scope_for
+
+
+# edge lists at or below this many edges finish on the driver: two int64
+# columns, ~16 MB collected once
+DRIVER_EDGES = 1 << 20
 
 
 @dataclass
@@ -65,6 +80,31 @@ def _small_star(e: DataFrame) -> DataFrame:
             .dropDuplicates(["a", "b"]))
 
 
+def _driver_labels(e: DataFrame) -> DataFrame:
+    """(id, label) for every endpoint of edge list e, label = the min id of
+    its component, from one collect of e. Ids are compacted by np.unique,
+    which sorts them, so a component's min index is its min id. Each pass
+    hooks every tree root onto the smallest root across its cross-tree
+    edges (parent[v] <= v throughout, so no cycles), then jumps pointers
+    until every node points at its root; edges inside one tree stay inside
+    it and are dropped."""
+    t = e.toArrow()
+    a = np.asarray(t.column("a"), dtype=np.int64)
+    b = np.asarray(t.column("b"), dtype=np.int64)
+    ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ia, ib = idx[:len(a)], idx[len(a):]
+    parent = np.arange(len(ids))
+    while len(ia):
+        ra, rb = parent[ia], parent[ib]
+        cross = ra != rb
+        ia, ib, ra, rb = ia[cross], ib[cross], ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+    return e.sparkSession.createDataFrame(
+        pa.table({"id": ids, "label": ids[parent]}))
+
+
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
                          max_iter: int = 25,
                          rounds_per_sync: int = 2,
@@ -72,17 +112,24 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     """edges: (a, b) long ids; vertices: optional (id) frame for isolated
     nodes. Returns every vertex labeled with cluster_id = its component min.
 
-    rounds_per_sync chains that many large+small contraction rounds into ONE
-    materialization + convergence check: each sync point is a driver round
-    trip whose fixed latency (~1-1.5 s on local mode) dominates small-graph
-    rounds — measured 7 rounds = ~10 s FLAT from 2 to 8 cores, i.e. pure
-    serial fraction. Chaining halves the sync points at the cost of at most
+    Contraction runs only while the edge list holds more than DRIVER_EDGES
+    edges (counted at entry and after every sync); at or below it the
+    current edge list is labeled on the driver (_driver_labels) and the
+    result is converged.
+
+    rounds_per_sync (which matters only above DRIVER_EDGES) chains that
+    many large+small contraction rounds into ONE materialization +
+    convergence check: each sync point is a driver round trip whose fixed
+    latency (~1-1.5 s on local mode) dominates small-graph rounds — measured
+    7 rounds = ~10 s FLAT from 2 to 8 cores, i.e. pure serial fraction.
+    Chaining halves the sync points at the cost of at most
     rounds_per_sync-1 extra (cheap, already-converged) contractions; the
     fixpoint is identical.
 
     CCResult.iterations counts EXECUTED contraction rounds (sync points x
-    rounds_per_sync) — an upper bound on the rounds the graph needed, since
-    the fixpoint may be reached partway through a chained sync. max_iter
+    rounds_per_sync) — 0 when the graph finished on the driver at entry,
+    and an upper bound on the rounds the graph needed otherwise, since the
+    fixpoint may be reached partway through a chained sync. max_iter
     bounds sync points, so at most rounds_per_sync * max_iter contractions
     run."""
     # tokenless: a private scope, so the result's checkpoints stay
@@ -110,6 +157,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     iterations, converged = 0, False
     prev_sig = _signature(e)
     for sync in range(1, max_iter + 1):
+        if prev_sig[0] <= DRIVER_EDGES:
+            break
         # eager=False: the signature aggregate below is the action that
         # materializes the checkpoint — one Spark job per sync instead of
         # two (each sync is driver-synchronized, so saved jobs are saved
@@ -143,12 +192,17 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
             break
         prev_sig = sig
 
-    # at the fixpoint every edge is (node -> component min)
-    labels = e.select(F.col("a").alias("id"), F.col("b").alias("label"))
-    centers = e.select(F.col("b").alias("id")).dropDuplicates(["id"]) \
-        .join(labels.select("id"), "id", "left_anti") \
-        .withColumn("label", F.col("id"))
-    labels = labels.union(centers)
+    if prev_sig[0] <= DRIVER_EDGES:
+        labels = _driver_labels(e)
+        scope.drop(e)  # collected: its blocks are dead
+        converged = True
+    else:
+        # at the fixpoint every edge is (node -> component min)
+        labels = e.select(F.col("a").alias("id"), F.col("b").alias("label"))
+        centers = e.select(F.col("b").alias("id")).dropDuplicates(["id"]) \
+            .join(labels.select("id"), "id", "left_anti") \
+            .withColumn("label", F.col("id"))
+        labels = labels.union(centers)
     if vertices is not None:
         isolated = (vertices.select(F.col("id").cast("long").alias("id"))
                     .dropDuplicates(["id"])

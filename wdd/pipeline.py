@@ -5,7 +5,7 @@ Spark equivalent of the reference's whole task lifecycle (SURVEY.md §3.1):
   pages --digest--> distinct digests --extract/simhash/minhash UDFs-->
   per-digest signatures --join back--> page-level simhashes table;
   candidate edges from {exact J3, LSH J1, pigeonhole J2, substring} -->
-  hash-min connected components J4 --> clusters.
+  star-contraction connected components J4 --> clusters.
 
 Design invariants:
   * the expensive UDFs run ONCE per distinct digest (bulk form of the
