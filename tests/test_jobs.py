@@ -93,3 +93,90 @@ def test_latest_status_deterministic_under_same_seq_race(spark, tmp_path,
         assert set(ls.values()) == {"done"}
     # and the terminal state blocks resubmission
     assert led.submit(requested).count() == 0
+
+
+def test_next_seq_distinct_across_threads_and_ledgers(spark, tmp_path):
+    """Seq claims are exclusive creates: racing threads on two JobLedger
+    instances over one root never get the same seq, and none is skipped."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    ledgers = [JobLedger(tmp_path / "jobs", spark) for _ in range(2)]
+    n = 64
+    with ThreadPoolExecutor(8) as pool:
+        seqs = list(pool.map(lambda i: ledgers[i % 2]._next_seq(), range(n)))
+    assert sorted(seqs) == list(range(1, n + 1))
+
+
+def test_stageless_then_staged_submit_reads_pinned(spark, tmp_path,
+                                                   requested):
+    """A stage-less submit writes `stage` as a string column, so it and a
+    staged submit read back together under LEDGER_SCHEMA."""
+    from wdd.jobs import LEDGER_SCHEMA
+
+    led = JobLedger(tmp_path / "jobs", spark)
+    led.submit(requested.where(F.col("url") < "http://site5"))
+    led.submit(requested, stage="sig_batch_1")
+    got = led.read()
+    assert got.schema == spark.createDataFrame([], LEDGER_SCHEMA).schema
+    stages = sorted((r.url, r.stage, r.seq) for r in got.collect())
+    assert stages == sorted(
+        [(f"http://site{i}.example/", None, 1) for i in range(5)]
+        + [(f"http://site{i}.example/", "sig_batch_1", 2)
+           for i in range(5, 10)])
+
+
+def test_flat_pre_claim_ledger_reads_and_seqs_above_its_max(spark, tmp_path,
+                                                            requested):
+    """A ledger written before seq claims (flat parquet files in jobs/, a
+    stage-less submit's all-null `stage` stored as BOOLEAN) still reads,
+    reconciles, and its next seq is above its max."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wdd.jobs import job_id_col
+
+    root = tmp_path / "jobs"
+    flat = root / "jobs"
+
+    def append(df, status, stage, seq):
+        (df.withColumn("job_id", job_id_col())
+         .withColumn("status", F.lit(status))
+         .withColumn("stage", F.lit(stage))
+         .withColumn("seq", F.lit(seq).cast("long"))
+         .select("job_id", "url", "year", "status", "stage", "seq")
+         .write.mode("append").parquet(str(flat)))
+
+    low = requested.where(F.col("url") < "http://site5")
+    append(low, "running", None, 1)
+    append(low, "done", None, 4)
+    append(requested.subtract(low), "running", "sig_batch_1", 7)
+    assert any(pq.read_schema(p).field("stage").type != pa.string()
+               for p in flat.glob("*.parquet"))
+
+    led = JobLedger(root, spark)
+    assert led.read().count() == 15
+    assert led.status("http://site1.example/", 2024) == "done"
+    assert led.status("http://site7.example/", 2024) == "running"
+    assert led._next_seq() == 8
+    store = StageStore(tmp_path / "store", spark)
+    store.materialize("sig_batch_1", requested)
+    assert led.reconcile(store) == 5
+    assert led.status("http://site7.example/", 2024) == "done"
+    assert led.submit(requested).count() == 0
+
+
+def test_long_ledger_reads_without_a_spark_job(spark, tmp_path, requested):
+    """Every append lands in the one flat jobs/ directory, so past Spark's
+    parallel-listing threshold (32 paths) a read still lists on the driver
+    and runs no job, and submit reads back exactly its own append."""
+    led = JobLedger(tmp_path / "jobs", spark)
+    row = led.submit(requested.limit(1))
+    for _ in range(40):
+        led.mark(row, "failed")
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.statusStore().jobsList(None).size()
+    ledger = led.read()
+    assert sc.statusStore().jobsList(None).size() == before
+    assert ledger.count() == 41
+    again = led.submit(requested)
+    assert [r.seq for r in again.collect()] == [42] * 10

@@ -302,7 +302,11 @@ def test_release_returns_persistent_rdds_to_their_count_before_the_run(
     the session's persistent RDDs exactly as the run found them."""
     jsc = spark.sparkContext._jsc
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
-    before = jsc.getPersistentRDDs().size()
+    # Hold the RDDs persisted before the run: the context cleaner drops
+    # earlier tests' unreferenced ones whenever the JVM collects garbage,
+    # which would move the count mid-run.
+    held = jsc.getPersistentRDDs()
+    before = held.size()
     res = run_dedup_pipeline(spark, pages.limit(150), eager_stages=eager)
     res.clusters.write.format("noop").mode("overwrite").save()
     assert jsc.getPersistentRDDs().size() > before

@@ -2,11 +2,12 @@
 
 North-rule requirement: "per-partition checkpointed lineage + metrics so any
 stage resumes mid-run". Each stage the pipeline materializes is written to
-`<root>/<stage>/` with a `_manifest.json` recording row count, partition
-count, the pinned algorithm config, and wall time. A rerun with the same
-store skips any stage whose manifest is present and loads its parquet instead
-— idempotent overwrite semantics replace the reference's Celery job-dedup
-(web.py:29-43) and task-state machinery (discover.py:204-227).
+`<root>/<stage>/` with a `_manifest.json` recording row count (from the
+parquet footers), partition count, the pinned algorithm config, and wall
+time. A rerun with the same store skips any stage whose manifest is present
+and loads its parquet instead — idempotent overwrite semantics replace the
+reference's Celery job-dedup (web.py:29-43) and task-state machinery
+(discover.py:204-227).
 
 Storage format: local parquet with an explicit directory layout. On a real
 cluster the same call sites write Iceberg (`writeTo(...).createOrReplace()`)
@@ -23,6 +24,7 @@ import os
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from wdd.config import DEFAULT, WddConfig
@@ -55,8 +57,11 @@ class StageStore:
     def materialize(self, stage: str, df: DataFrame,
                     partition_by: list[str] | None = None) -> DataFrame:
         """Write-once: if the stage manifest exists, return the stored data
-        (resume path); otherwise write parquet + manifest atomically
-        (manifest last, so a crashed write is retried, never half-trusted)."""
+        (resume path); otherwise write parquet, then the manifest (manifest
+        last, fsynced and moved into place whole, so a crashed write is
+        retried, never half-trusted). The row count comes from the parquet
+        footers and, without `partition_by`, the read-back reuses `df`'s
+        schema, so neither costs a Spark job."""
         if self.exists(stage):
             return self.load(stage)
         t0 = time.monotonic()
@@ -65,17 +70,23 @@ class StageStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(path))
-        out = self.spark.read.parquet(str(path))
-        n = out.count()
+        reader = self.spark.read
+        if not partition_by:
+            reader = reader.schema(df.schema)
+        out = reader.parquet(str(path))
+        files = list(path.rglob("*.parquet"))
         manifest = {
             "stage": stage,
-            "rows": n,
+            "rows": sum(pq.read_metadata(f).num_rows for f in files),
             "partitions": out.rdd.getNumPartitions(),
             "wall_ms": int((time.monotonic() - t0) * 1000),
-            "written_files": len([p for p in os.listdir(path)
-                                  if p.endswith(".parquet")]),
+            "written_files": len(files),
             "config": self.cfg.as_dict(),
         }
-        with open(self._manifest(stage), "w") as f:
+        tmp = self._manifest(stage).with_suffix(".tmp")
+        with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._manifest(stage))
         return out

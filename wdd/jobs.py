@@ -14,17 +14,32 @@ maps to the same id by construction (the bulk analog of the reference's
 active-task lookup). Failed jobs do NOT block — resubmitting one runs it
 again, matching the reference's FAILURE -> new task path.
 
-The ledger is parquet-append with a monotone `seq` per write batch; latest
-seq wins per job_id (a per-job window, the same shape as the collapse
-operator). StageStore linkage: reconcile() marks running jobs done once
-their stage manifest exists, so a crashed run resumes with the store and
-the ledger converges without a coordinator.
+The ledger is parquet-append into one flat `jobs/` directory: every
+submit/mark is written to a hidden staging directory and its part files are
+renamed into `jobs/` as `<seq>-<part file>`. The whole ledger is one read of
+`jobs/` with LEDGER_SCHEMA pinned, so no read runs a schema-inference job and
+the one-directory listing stays on the driver however many appends the
+ledger holds. `seq` is allocated without Spark and without a lock: a writer
+claims `seq/<n>` with an exclusive create (O_CREAT|O_EXCL), so two writers —
+threads or processes on one root — never share a seq, and one append's rows
+are exactly the files named `<seq>-*`. Latest seq wins per job_id (a per-job
+window, the same shape as the collapse operator). StageStore linkage:
+reconcile() marks running jobs done once their stage manifest exists, so a
+crashed run resumes with the store and the ledger converges without a
+coordinator.
+
+A ledger written before seq claims existed (`part-*` files in `jobs/`, no
+`seq/`) still reads; its first claim starts above its max seq.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +47,7 @@ from wdd.checkpoint import StageStore
 
 LEDGER_SCHEMA = ("job_id string, url string, year string, status string, "
                  "stage string, seq long")
+LEDGER_COLUMNS = ("job_id", "url", "year", "status", "stage", "seq")
 BLOCKING = ("running", "done")
 
 
@@ -48,11 +64,12 @@ def latest_status(ledger: DataFrame) -> DataFrame:
     """One row per job_id: the row with the highest seq (per-job window —
     partitioned, scales like any collapse).
 
-    Deterministic under concurrent writers: `_next_seq` is read-max-then-
-    append, so two racing submitters CAN allocate the same seq. Ties are
-    broken by status rank (done > failed > running — a terminal state a
-    racing writer recorded is never shadowed by a concurrent 'running'
-    append), then url/year for a total order. Same-seq same-status
+    JobLedger's own writers never share a seq (`_next_seq` claims it
+    exclusively), but rows appended out of band, or by a ledger written
+    before seq claims existed, can. Ties are broken by status rank
+    (done > failed > running — a terminal state a racing writer recorded
+    is never shadowed by a concurrent 'running' append), then url/year for
+    a total order. Same-seq same-status
     duplicates collapse to one row either way."""
     rank = F.coalesce(
         *[F.when(F.col("status") == s, F.lit(r))
@@ -86,15 +103,71 @@ class JobLedger:
     def _data_dir(self) -> Path:
         return self.root / "jobs"
 
+    def _pinned(self):
+        return self.spark.read.schema(LEDGER_SCHEMA)
+
     def read(self) -> DataFrame:
         d = self._data_dir()
         if not d.exists():
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
-        return self.spark.read.parquet(str(d))
+        # Files not named `<seq>-*` come from pre-claim ledgers or out-of-band
+        # writers. A stage-less pre-claim submit stored its all-null `stage`
+        # as BOOLEAN, which the pinned read rejects: read those without it.
+        others = [e.path for e in os.scandir(d)
+                  if e.name[0] not in "_." and not e.name[0].isdigit()]
+        stageless = [p for p in others
+                     if pq.read_schema(p).field("stage").type != pa.string()]
+        if not stageless:
+            return self._pinned().parquet(str(d))
+        out = (self.spark.read
+               .schema(LEDGER_SCHEMA.replace("stage string, ", ""))
+               .parquet(*stageless)
+               .withColumn("stage", F.lit(None).cast("string"))
+               .select(*LEDGER_COLUMNS)
+               .unionByName(self._pinned().option("pathGlobFilter", "[0-9]*")
+                            .parquet(str(d))))
+        rest = [p for p in others if p not in stageless]
+        return out.unionByName(self._pinned().parquet(*rest)) if rest else out
 
     def _next_seq(self) -> int:
-        cur = self.read().agg(F.max("seq").alias("m")).collect()[0].m
-        return (cur or 0) + 1
+        """Claim the next seq: exclusively create `seq/<n>` above every claim
+        seen, moving on past any claim a racing writer made first. No Spark
+        job, except once for a pre-claim ledger (no claims yet, data
+        present), whose claims start above its max seq."""
+        d = self.root / "seq"
+        d.mkdir(exist_ok=True)
+        claims = [int(p) for p in os.listdir(d) if p.isdigit()]
+        if claims:
+            seq = max(claims) + 1
+        elif self._data_dir().exists():
+            cur = self.read().agg(F.max("seq").alias("m")).collect()[0].m
+            seq = (cur or 0) + 1
+        else:
+            seq = 1
+        while True:
+            try:
+                os.close(os.open(d / str(seq),
+                                 os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                return seq
+            except FileExistsError:
+                seq += 1
+
+    def _append(self, rows: DataFrame) -> DataFrame:
+        """Write `rows` as one ledger append under a fresh seq: Spark writes
+        them to a hidden `jobs/_append-<seq>` directory, whose part files
+        are then renamed into `jobs/` as `<seq>-<part file>`. Returns a read
+        of exactly this append."""
+        seq = self._next_seq()
+        d = self._data_dir()
+        staging = d / f"_append-{seq}"
+        (rows.withColumn("seq", F.lit(seq).cast("long"))
+         .select(*LEDGER_COLUMNS)
+         .write.parquet(str(staging)))
+        for f in staging.glob("part-*"):
+            os.replace(f, d / f"{seq}-{f.name}")
+        shutil.rmtree(staging)
+        return (self._pinned().option("pathGlobFilter", f"{seq}-*")
+                .parquet(str(d)))
 
     def submit(self, requested: DataFrame,
                stage: str | None = None) -> DataFrame:
@@ -103,51 +176,42 @@ class JobLedger:
         them (empty result == everything was already submitted — the
         reference's get_active_task no-op path). `stage` optionally names
         the StageStore stage whose manifest marks these jobs done."""
-        fresh = pending_work(requested, self.read())
-        seq = self._next_seq()
-        rows = (fresh
-                .withColumn("job_id", job_id_col())
-                .withColumn("status", F.lit("running"))
-                .withColumn("stage", F.lit(stage))
-                .withColumn("seq", F.lit(seq).cast("long"))
-                .select("job_id", "url", "year", "status", "stage", "seq"))
-        rows.write.mode("append").parquet(str(self._data_dir()))
-        return self.read().where((F.col("seq") == seq)
-                                 & (F.col("status") == "running"))
+        return self._append(
+            pending_work(requested, self.read())
+            .withColumn("job_id", job_id_col())
+            .withColumn("status", F.lit("running"))
+            .withColumn("stage", F.lit(stage).cast("string")))
 
     def mark(self, jobs: DataFrame, status: str) -> None:
         """Append a status transition for every job in `jobs` (needs job_id,
         url, year, stage columns — e.g. the frame submit() returned)."""
-        seq = self._next_seq()
-        (jobs.select("job_id", "url", "year", "stage")
-         .dropDuplicates(["job_id"])
-         .withColumn("status", F.lit(status))
-         .withColumn("seq", F.lit(seq).cast("long"))
-         .select("job_id", "url", "year", "status", "stage", "seq")
-         .write.mode("append").parquet(str(self._data_dir())))
+        self._append(jobs.select("job_id", "url", "year", "stage")
+                     .dropDuplicates(["job_id"])
+                     .withColumn("status", F.lit(status)))
 
     def reconcile(self, store: StageStore) -> int:
         """Mark running jobs done when their stage manifest exists in the
         store (resume path: a crashed run that DID materialize its stage is
-        recognized as complete). Stage names are few — the distinct-stage
-        collect is metadata-sized. Returns #jobs transitioned."""
+        recognized as complete). Stage names are few — one per-stage count
+        collect is metadata-sized and gives both the stages and how many
+        jobs each transitions. Returns #jobs transitioned."""
         running = latest_status(self.read()).where(
             (F.col("status") == "running") & F.col("stage").isNotNull())
-        stages = [r.stage for r in
-                  running.select("stage").distinct().collect()]
-        finished = [s for s in stages if store.exists(s)]
+        counts = {r.stage: r["count"] for r in
+                  running.groupBy("stage").count().collect()}
+        finished = [s for s in counts if store.exists(s)]
         if not finished:
             return 0
-        done = running.where(F.col("stage").isin(finished))
-        n = done.count()
-        if n:
-            self.mark(done, "done")
-        return n
+        self.mark(running.where(F.col("stage").isin(finished)), "done")
+        return sum(counts[s] for s in finished)
 
     def status(self, url: str, year) -> str | None:
         """Point status read (the reference's /job poll, web.py:135-164) —
-        an API-sized collect at the serving boundary."""
-        rows = (latest_status(self.read())
-                .where((F.col("url") == url) & (F.col("year") == str(year)))
+        an API-sized collect at the serving boundary. Every row of a job_id
+        carries its (url, year), so filtering first leaves the window only
+        the polled job's rows to sort."""
+        rows = (latest_status(self.read()
+                              .where((F.col("url") == url)
+                                     & (F.col("year") == str(year))))
                 .select("status").collect())
         return rows[0].status if rows else None
