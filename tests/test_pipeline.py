@@ -175,18 +175,29 @@ def test_lazy_metrics_observe_rows(spark, sf_dir):
 
 def test_pipeline_precomputed_text_only_table(spark, sf_dir):
     """A table with NO html column (input_hint allows text-only corpora)
-    runs the whole pipeline via use_precomputed_text: digest identity comes
-    from text, and cluster labels agree with the html run on the same
-    corpus (extraction is the identity on these pages: text == extract(html),
-    the invariant test_pages_text_invariant pins)."""
+    runs the whole pipeline, at f=64 and at f=256: the pipeline chooses the
+    text path from the columns, digest identity comes from text, and each
+    page's simhash and cluster label agree with the html run on the same
+    corpus (extraction is the identity on these pages: text ==
+    extract(html), the invariant test_pages_text_invariant pins)."""
+    from wdd.config import WddConfig
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     text_only = pages.select("url", "warc_ts", "text", "lang")
-    res = run_dedup_pipeline(spark, text_only, use_precomputed_text=True,
-                             eager_stages=False)
-    res_html = run_dedup_pipeline(spark, pages, eager_stages=False)
-    a = {(r.page_id, r.cluster_id) for r in res.clusters.collect()}
-    b = {(r.page_id, r.cluster_id) for r in res_html.clusters.collect()}
-    assert len(a & b) / len(b) > 0.99
+    for cfg in (WddConfig(), WddConfig(simhash_size=256)):
+        sim = "simhash64" if cfg.simhash_size == 64 else "sim_parts"
+        res = run_dedup_pipeline(spark, text_only, cfg=cfg,
+                                 eager_stages=False)
+        res_html = run_dedup_pipeline(spark, pages, cfg=cfg,
+                                      eager_stages=False)
+        assert sim in res.signatures.columns
+        sims = {r.page_id: r[sim] for r in res.simhashes.collect()}
+        sims_html = {r.page_id: r[sim] for r in res_html.simhashes.collect()}
+        assert sims == sims_html
+        a = {(r.page_id, r.cluster_id) for r in res.clusters.collect()}
+        b = {(r.page_id, r.cluster_id) for r in res_html.clusters.collect()}
+        assert len(a & b) / len(b) > 0.99
+        res.release()
+        res_html.release()
 
 
 def test_extraction_failed_pages_never_weld(spark, sf_dir):

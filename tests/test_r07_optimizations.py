@@ -6,7 +6,6 @@ Each test pins an optimization that changed an operator's internals:
     verdict next #3);
   * shard_pack's range bucket widened past 256 (verdict next #4) with
     bucket-count-invariant output;
-  * the balanced-tree unrolled Jaccard estimate equals the HOF fold;
   * the unrolled Hamming-parts distance equals the HOF fold;
   * the vectorized adjacent-LCP (binary lifting) equals Kasai;
   * repetition_stats' single-pass plan carries exactly one Generate
@@ -21,8 +20,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from wdd.operators.pairs import (ASSERT_GROUP_MAX, jaccard_estimate_col,
-                                 pairs_from_groups_scalable)
+from wdd.operators.pairs import ASSERT_GROUP_MAX, pairs_from_groups_scalable
 
 
 def test_huge_group_none_guarantee_fails_loudly(spark):
@@ -78,19 +76,6 @@ def test_shard_pack_rejects_absurd_buckets(spark):
                                  F.lit("a b").alias("text"))
     with pytest.raises(ValueError):
         shard_pack(docs, budget=10, buckets=16 ** 8 + 1)
-
-
-def test_unrolled_jaccard_matches_hof(spark):
-    sigs = [([random.randint(0, 5) for _ in range(128)],
-             [random.randint(0, 5) for _ in range(128)])
-            for _ in range(50)]
-    df = spark.createDataFrame(
-        [(a, b) for a, b in sigs], "sa array<int>, sb array<int>")
-    out = df.select(
-        jaccard_estimate_col("sa", "sb", 128).alias("unrolled"),
-        jaccard_estimate_col("sa", "sb").alias("hof")).collect()
-    for r in out:
-        assert r.unrolled == r.hof
 
 
 def test_unrolled_hamming_matches_hof(spark):

@@ -24,14 +24,13 @@ def test_stage_store_resume(spark, sf_dir, tmp_path):
     pages = pages.limit(150).localCheckpoint(eager=True)
 
     store1 = StageStore(str(tmp_path / "run"), spark)
-    res1 = run_dedup_pipeline(spark, pages, store=store1,
-                              enable_substring=False)
+    res1 = run_dedup_pipeline(spark, pages, store=store1)
     first = _cluster_sets(res1.clusters)
 
     # every stage has a manifest with rows + config echo
     for stage in ("prep", "signatures", "simhashes", "edges_exact",
-                  "edges_lsh", "edges_pigeonhole", "candidate_pairs",
-                  "clusters"):
+                  "edges_lsh", "edges_pigeonhole", "edges_substring",
+                  "candidate_pairs", "clusters"):
         assert store1.exists(stage), stage
         m = store1.manifest(stage)
         assert m["rows"] >= 0 and "config" in m and m["wall_ms"] >= 0
@@ -40,8 +39,7 @@ def test_stage_store_resume(spark, sf_dir, tmp_path):
     # Passing a DIFFERENT pages frame proves stages come from the store.
     empty = pages.limit(0)
     store2 = StageStore(str(tmp_path / "run"), spark)
-    res2 = run_dedup_pipeline(spark, empty, store=store2,
-                              enable_substring=False)
+    res2 = run_dedup_pipeline(spark, empty, store=store2)
     assert _cluster_sets(res2.clusters) == first
 
 
@@ -52,12 +50,10 @@ def test_parallelism_invariance(spark, sf_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        res_a = run_dedup_pipeline(spark, pages.repartition(2),
-                                   enable_substring=False)
+        res_a = run_dedup_pipeline(spark, pages.repartition(2))
         sets_a = _cluster_sets(res_a.clusters)
         spark.conf.set("spark.sql.shuffle.partitions", "17")
-        res_b = run_dedup_pipeline(spark, pages.repartition(9),
-                                   enable_substring=False)
+        res_b = run_dedup_pipeline(spark, pages.repartition(9))
         sets_b = _cluster_sets(res_b.clusters)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -11,7 +11,7 @@ from wdd.kernels import (
     minhash_signature,
     surt,
 )
-from wdd.kernels.simhash import simhash_b64
+from wdd.kernels.simhash import simhash_b64, simhash_parts_batch
 from wdd import udfs
 
 
@@ -98,9 +98,10 @@ def test_simhash_bytes_udf_256_reference_prod_config(spark):
 
 def test_fused_signatures_matches_separate_udfs(spark, sf_dir):
     """The fused one-round signatures UDF is bit-identical to the separate
-    extract -> simhash/minhash plan at BOTH widths, and evaluates once per
-    row even when all three struct fields are selected (one ArrowEvalPython
-    node, one udf instance in the physical plan)."""
+    extract -> simhash/minhash plan at BOTH widths, from html and from
+    text, and evaluates once per row even when all three struct fields are
+    selected (one ArrowEvalPython node, one udf instance in the physical
+    plan)."""
     html_df = (spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
                .selectExpr("doc_id",
                            "concat('<html><body><p>', text, "
@@ -142,3 +143,39 @@ def test_fused_signatures_matches_separate_udfs(spark, sf_dir):
     a = {r.doc_id: r.sim_parts for r in sep256.collect()}
     b = {r.doc_id: r.sim_parts for r in fused256.collect()}
     assert a == b
+
+    # text input (a text-only pages table): from_html=False takes the text
+    # as is. One partition puts the null-text and empty-text rows (null
+    # simhash) in the same Arrow batch as the real ones, whose int64
+    # simhashes must still come back exact.
+    text_df = (spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+               .select("doc_id", "text")
+               .unionByName(spark.createDataFrame(
+                   [(-1, None), (-2, "")], "doc_id long, text string"))
+               .coalesce(1))
+    texts = {r.doc_id: r.text for r in text_df.collect()}
+    feats = {k: dict(Counter(t.split())) if t else {}
+             for k, t in texts.items()}
+    sep_text = text_df.select(
+        "doc_id", "text",
+        udfs.simhash64_text_udf("text").alias("simhash64"),
+        udfs.minhash128_udf("text").alias("signature"))
+    fused_text = text_df.select(
+        "doc_id", udfs.make_signatures_udf(64, from_html=False)("text")
+        .alias("x")).select("doc_id", "x.*")
+    a = {r.doc_id: tuple(r)[1:] for r in sep_text.collect()}
+    b = {r.doc_id: tuple(r)[1:] for r in fused_text.collect()}
+    assert a == b and len(a) == 42
+    for k, f in feats.items():
+        assert b[k][0] == texts[k]
+        assert b[k][1] == (_signed64(calculate_simhash(
+            f, 64, custom_hash_function)) if f else None)
+    assert b[-1][1] is None and b[-2][1] is None
+
+    fused_text256 = text_df.select(
+        "doc_id", udfs.make_signatures_udf(256, from_html=False)("text")
+        .alias("x")).select("doc_id", "x.sim_parts")
+    keys = sorted(feats)
+    want = dict(zip(keys, simhash_parts_batch([feats[k] for k in keys], 256)))
+    assert {r.doc_id: r.sim_parts for r in fused_text256.collect()} == want
+    assert want[-1] is None and want[-2] is None

@@ -42,13 +42,6 @@ class WddConfig:
     # corpus maxes at ~0.6 between distinct docs) while any re-encoded /
     # paraphrase-duplicate embedding pair lands near 1.0.
     cosine_dup_threshold: float = 0.9
-    # sign-LSH bucket width for the pipeline's embedding edge source.
-    # None = auto: ceil(log2(n_vectors)) clamped to [8, 16], so expected
-    # bucket occupancy stays ~1 and candidate count stays ~linear in n.
-    # Identical/re-encoded vectors (the duplicate class this stage exists
-    # for) share codes in EVERY table at any width — recall 1.0 regardless;
-    # boundary-cosine pairs trade recall for candidate volume as usual.
-    embedding_lsh_bits: int | None = None
 
     # --- substring dedup (suffix/anchor stage) ---
     # window L=100 with 1/8 anchor density: a 170-char planted overlap has 71

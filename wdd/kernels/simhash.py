@@ -73,36 +73,22 @@ def simhash_b64(simhash: int, simhash_size: int) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized 64-bit batch kernel (the UDF hot path).
+# Vectorized batch kernel (the UDF hot path): one kernel at every width;
+# f=64's scalar long is its one-word view.
 # ---------------------------------------------------------------------------
 
-def _token_bits64(tokens: list[str], hash_name: str) -> np.ndarray:
-    """(n_tokens, 64) uint8 bit matrix; column j holds bit (63 - j) of the
-    low-64-bit mask of the big-endian digest int — i.e. np.unpackbits order
-    over the digest's last 8 bytes."""
-    if hash_name == "blake2b":
-        digest = hashlib.blake2b
-    elif hash_name == "md5":
-        digest = hashlib.md5
-    else:
-        raise ValueError(f"unknown simhash token hash {hash_name!r}")
-    buf = np.empty((len(tokens), 8), dtype=np.uint8)
-    for i, tok in enumerate(tokens):
-        buf[i] = np.frombuffer(digest(tok.encode("utf-8")).digest()[-8:], dtype=np.uint8)
-    return np.unpackbits(buf, axis=1)
-
-
 def simhash_parts_batch(features_list, simhash_size: int,
-                        hash_name: str = "blake2b") -> list[list[int]]:
+                        hash_name: str = "blake2b") -> list[list[int] | None]:
     """SimHash at any byte-aligned f <= 512 over a batch of {token: weight}
     dicts -> per-doc list of f/64 signed int64 words, little-endian word
     order (word j holds bits [64j, 64j+64) of the reference integer — the
     same layout pack_simhash_to_bytes(h, f) writes, 8 bytes per word).
 
-    This is the f=256 production-config hot path (reference
-    conf.yml.example:2 pins simhash.size: 256; discover.py:95-96 enforces
-    f <= 512): same one-hash-per-distinct-token + matrix-vote structure as
-    simhash64_batch, widened to f bit columns.
+    The hot path at every width: the north-star f=64 (simhash64_batch) and
+    the reference's production f=256 (conf.yml.example:2; discover.py:95-96
+    enforces f <= 512). Hashes each distinct token once per batch (the batch
+    analog of the reference's per-task digest memo, discover.py:160-163),
+    then does the weighted bit vote as one matrix product per document.
 
     Empty feature bags yield None (not an all-zero vector): the reference
     skips captures with no extracted features entirely (discover.py:158
@@ -163,35 +149,8 @@ def parts_to_b64(parts: list[int], simhash_size: int) -> str:
 
 def simhash64_batch(features_list, hash_name: str = "blake2b") -> list:
     """SimHash f=64 over a batch of {token: weight} dicts -> list of int64
-    values (None for empty feature bags).
-
-    Hashes each distinct token once per batch (the batch analog of the
-    reference's per-task digest memo, discover.py:160-163), then does the
-    weighted bit vote as one matrix product per document.
-
-    Empty feature bags yield None (not 0): the reference skips captures with
-    no extracted features entirely (discover.py:158 `if data:`), so
-    extraction-failed pages must never share a simhash value — an all-zero
-    sentinel would star-weld every failed page into one cluster in the
-    pipeline's samesim stage.
-    """
-    out: list = [None] * len(features_list)
-    vocab: dict[str, int] = {}
-    for feats in features_list:
-        if feats:
-            for tok in feats:
-                if tok not in vocab:
-                    vocab[tok] = len(vocab)
-    if not vocab:
-        return out
-    bits = _token_bits64(list(vocab), hash_name).astype(np.int64)  # (V, 64)
-    for d, feats in enumerate(features_list):
-        if not feats:
-            continue
-        idx = np.fromiter((vocab[t] for t in feats), dtype=np.int64, count=len(feats))
-        w = np.fromiter(feats.values(), dtype=np.int64, count=len(feats))
-        ones = w @ bits[idx]                      # (64,) weighted ones per bit
-        bitvals = (2 * ones > int(w.sum())).astype(np.uint8)  # MSB-first order
-        packed = np.packbits(bitvals)             # 8 bytes, big-endian
-        out[d] = int.from_bytes(packed.tobytes(), "big", signed=True)
-    return out
+    values (None for empty feature bags): the one-word view of
+    simhash_parts_batch, whose single little-endian signed word IS the
+    signed 64-bit reference integer."""
+    return [p[0] if p is not None else None
+            for p in simhash_parts_batch(features_list, 64, hash_name)]

@@ -12,7 +12,6 @@ not from extra count() jobs over unmaterialized lineage.
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import dataclass, field
 
@@ -82,9 +81,6 @@ class MetricsCollector:
             "stage string, rows_out long, wall_ms long, partitions int, "
             "checkpoint_path string",
         )
-
-    def to_json(self) -> str:
-        return json.dumps([r.__dict__ for r in self.records])
 
 
 class stage_timer:

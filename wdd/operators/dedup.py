@@ -19,8 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from wdd.operators.pairs import pairs_from_groups
-
 
 def with_digest(pages: DataFrame, content_col: str = "html",
                 out_col: str = "digest") -> DataFrame:
@@ -70,10 +68,3 @@ def exact_dup_clusters(df: DataFrame, key_col: str,
         F.col(id_col),
         F.min(id_col).over(w).alias("cluster_id"),
     )
-
-
-def exact_dup_pairs(df: DataFrame, key_col: str, id_col: str = "page_id",
-                    cap: int = 64) -> DataFrame:
-    """All verified exact-dup pairs (for recall reporting; star edges suffice
-    for clustering)."""
-    return pairs_from_groups(df, [key_col], id_col, cap=cap, source="exact")

@@ -173,10 +173,3 @@ def capture_diff_matrix(index: DataFrame, url: str, year: str) -> DataFrame:
         ham = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
     return (a.join(b, F.col("ts_a") < F.col("ts_b"))
             .select("ts_a", "ts_b", ham.cast("long").alias("hamming")))
-
-
-def sentinel_rows(spark, url: str, year) -> DataFrame:
-    """S4: the no-captures sentinel (reference discover.py:263-269)."""
-    return spark.createDataFrame(
-        [(surt(url), str(year), "-1")],
-        "surt_key string, ts14 string, simhash_b64 string")

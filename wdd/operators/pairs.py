@@ -199,32 +199,10 @@ def dedup_pairs(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
     return df.groupBy(a, b).agg(*agg)
 
 
-def jaccard_estimate_col(sig_a: str, sig_b: str,
-                         n_perms: int | None = None) -> Column:
+def jaccard_estimate_col(sig_a: str, sig_b: str) -> Column:
     """MinHash-signature Jaccard estimate, fully JVM-side:
-    mean(positions where the two signatures agree).
-
-    With `n_perms` (the statically-known signature length, cfg.minhash_perms)
-    the agreement count is UNROLLED into a BALANCED-tree sum of
-    (a[i] == b[i]) int casts: higher-order functions (zip_with/aggregate)
-    are CodegenFallback in Spark, so the folded form walks the interpreted
-    evaluator per element per pair. Integer addition is associative and
-    exact, so the balanced association is identical to the left fold.
-
-    MEASURED (round-7) AND LEFT UNWIRED: at driver-bench candidate volumes
-    (~10^3-10^4 pairs) even the balanced 128-term tree LOSES ~1.2 s per
-    planning to Catalyst analysis/codegen of the wide expression (left-deep
-    was far worse, 4.3 -> 10.6 s), so every production call site keeps the
-    HOF fold. The unrolled form only pays off when per-pair evaluation
-    dominates planning (>= ~10^6 candidate pairs per plan); callers at that
-    scale can opt in. Divisor stays size(sig_a)."""
-    if n_perms is not None:
-        terms = [(F.col(sig_a)[i] == F.col(sig_b)[i]).cast("int")
-                 for i in range(n_perms)]
-        while len(terms) > 1:
-            terms = [terms[i] + terms[i + 1] if i + 1 < len(terms)
-                     else terms[i] for i in range(0, len(terms), 2)]
-        return (terms[0].cast("double") / F.size(sig_a)).alias("jaccard_est")
+    mean(positions where the two signatures agree). Divisor is
+    size(sig_a)."""
     return (
         F.aggregate(
             F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
@@ -232,8 +210,3 @@ def jaccard_estimate_col(sig_a: str, sig_b: str,
             lambda acc, x: acc + x,
         ).cast("double") / F.size(sig_a)
     ).alias("jaccard_est")
-
-
-def hamming_col(sim_a: str, sim_b: str) -> Column:
-    """64-bit Hamming distance via the built-in bit_count (JVM-side)."""
-    return F.bit_count(F.col(sim_a).bitwiseXOR(F.col(sim_b)))

@@ -1,9 +1,13 @@
 """J2 — SimHash Hamming pigeonhole candidate generation.
 
-Pigeonhole principle: split the 64-bit simhash into n_blocks = k+1 blocks;
+Pigeonhole principle: split the f-bit simhash into n_blocks = k+1 blocks;
 any pair within Hamming distance k agrees on at least one whole block, so an
 equi-join per block value finds every such pair. Verification is the built-in
-`bit_count(a XOR b) <= k` — pure codegen.
+`bit_count(a XOR b) <= k` — pure codegen; summed per word for f > 64.
+One operator, pigeonhole_candidates, serves both simhash layouts and picks
+its block keys and verifier from the column's type: the scalar long
+`simhash64` (f=64) or the array<long> of f/64 words `sim_parts` (the
+reference's prod f=256, conf.yml.example:2).
 
 Scale notes:
   * runs over DISTINCT simhash values, not pages — exact duplicates (and
@@ -18,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from wdd.config import DEFAULT, WddConfig
 from wdd.operators.pairs import dedup_pairs, pairs_from_groups_scalable
@@ -42,25 +47,36 @@ def pigeonhole_candidates(simhashes: DataFrame, id_col: str = "simhash64",
                           cache_token: str | None = None) -> DataFrame:
     """Candidate (a, b) pairs of DISTINCT simhash values within Hamming k.
 
-    Input: any DataFrame with a simhash64 column; distinct is taken here.
-    Output columns a, b are simhash values (long), verified bit_count <= k.
-    """
+    Input: any DataFrame with a simhash column; distinct is taken here. A
+    long column (f=64) is split by block_keys_col and verified by one
+    bit_count; an array<long> column of f/64 little-endian words (f > 64)
+    by parts_block_keys_col and hamming_parts_col. Either way the plan is
+    distinct values, one explode, one groupBy shuffle, codegen Hamming
+    verify (Spark arrays of longs group, sort and join like scalars).
+    Output columns a, b are simhash values of the input's type, verified
+    within Hamming k, with a < b (lexicographically for arrays)."""
+    parts = isinstance(simhashes.schema[id_col].dataType, ArrayType)
     distinct = (simhashes.select(F.col(id_col).alias("sim"))
                 .where(F.col("sim").isNotNull())   # extraction-failed pages
                 .dropDuplicates(["sim"]))
+    keys = parts_block_keys_col if parts else block_keys_col
     exploded = distinct.select(
         "sim",
-        F.explode(block_keys_col("sim", cfg.n_blocks, cfg.simhash_size))
+        F.explode(keys("sim", cfg.n_blocks, cfg.simhash_size))
         .alias("block_key"),
     )
     pairs = pairs_from_groups_scalable(
         exploded, ["block_key"], "sim",
         cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,
         source="pigeonhole", cache_token=cache_token)
-    verified = pairs.where(
-        F.bit_count(F.col("a").bitwiseXOR(F.col("b"))) <= cfg.hamming_k
-    )
-    return dedup_pairs(verified)
+    if parts:
+        n_words = (cfg.simhash_size // 64
+                   if cfg.simhash_size % 64 == 0 and cfg.simhash_size >= 64
+                   else None)
+        distance = hamming_parts_col("a", "b", n_words)
+    else:
+        distance = F.bit_count(F.col("a").bitwiseXOR(F.col("b")))
+    return dedup_pairs(pairs.where(distance <= cfg.hamming_k))
 
 
 def hamming_parts_col(a: str, b: str, n_words: int | None = None):
@@ -116,32 +132,8 @@ def pigeonhole_candidates_parts(simhashes: DataFrame,
                                 parts_col: str = "sim_parts",
                                 cfg: WddConfig = DEFAULT,
                                 cache_token: str | None = None) -> DataFrame:
-    """pigeonhole_candidates for f > 64: simhash as array<long> of f/64
-    little-endian words (the layout make_simhash_parts_udf emits). Same
-    plan shape as the 64-bit path — distinct values, one explode, one
-    groupBy shuffle, codegen Hamming verify — with array-typed ids (Spark
-    arrays of longs group, sort and join like scalars).
-
-    Output columns a, b are the word arrays themselves, lexicographically
-    ordered a < b."""
-    distinct = (simhashes.select(F.col(parts_col).alias("sim"))
-                .where(F.col("sim").isNotNull())
-                .dropDuplicates(["sim"]))
-    exploded = distinct.select(
-        "sim",
-        F.explode(parts_block_keys_col("sim", cfg.n_blocks, cfg.simhash_size))
-        .alias("block_key"),
-    )
-    pairs = pairs_from_groups_scalable(
-        exploded, ["block_key"], "sim",
-        cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,
-        source="pigeonhole", cache_token=cache_token)
-    n_words = (cfg.simhash_size // 64
-               if cfg.simhash_size % 64 == 0 and cfg.simhash_size >= 64
-               else None)
-    verified = pairs.where(
-        hamming_parts_col("a", "b", n_words) <= cfg.hamming_k)
-    return dedup_pairs(verified)
+    """pigeonhole_candidates over an array<long> `parts_col`."""
+    return pigeonhole_candidates(simhashes, parts_col, cfg, cache_token)
 
 
 def simhash_pairs_to_page_pairs(sim_pairs: DataFrame, simhashes: DataFrame,

@@ -156,11 +156,6 @@ def _suffix_array_levels(s: np.ndarray) -> tuple[np.ndarray, list]:
     return rank, levels
 
 
-def _suffix_array(s: np.ndarray) -> np.ndarray:
-    """O(n log n) prefix-doubling suffix array over an int array."""
-    return _suffix_array_levels(s)[0]
-
-
 def _adjacent_lcp_lifted(n: int, sa: np.ndarray, levels: list) -> np.ndarray:
     """LCP of every adjacent suffix-array pair, fully numpy-vectorized:
     binary lifting over the prefix-doubling rank levels (descending powers

@@ -31,15 +31,6 @@ def collapse_timestamp(df: DataFrame, ts_col: str = "warc_ts",
             .drop("_rn", "_ts_prefix"))
 
 
-def limit_per_key(df: DataFrame, key_cols: list[str], order_col: str,
-                  n: int) -> DataFrame:
-    """L2 generalized: first n rows per key (reference `limit` field,
-    discover.py:257-258, is the degenerate single-key case -> df.limit)."""
-    w = Window.partitionBy(*key_cols).orderBy(F.col(order_col).asc())
-    return (df.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= n).drop("_rn"))
-
-
 def paginate(df: DataFrame, order_cols: list[str], page: int,
              per_page: int, partition_cols: list[str] | None = None) -> DataFrame:
     """L3: rows of `page` (1-based) under a deterministic total order,

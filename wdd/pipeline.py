@@ -49,8 +49,8 @@ class PipelineResult:
     a dropped checkpoint block.
 
       pages            + digest, page_id
-      signatures       per-digest: digest, text, simhash64, signature
-      simhashes        page-level: url, warc_ts, digest, page_id, simhash64
+      signatures       per-digest: digest, text, simhash64|sim_parts, signature
+      simhashes        page-level: url, warc_ts, digest, page_id, simhash64|sim_parts
       candidate_pairs  a, b (page_id), source, score
       clusters         page_id, url, warc_ts, cluster_id
     """
@@ -74,11 +74,11 @@ class PipelineResult:
 
 def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                        store: StageStore | None = None,
-                       use_precomputed_text: bool = False,
-                       enable_substring: bool = True,
-                       eager_stages: bool = True,
-                       embedding_dim: int | None = None) -> PipelineResult:
-    """eager_stages=True materializes + counts every stage (manifest-grade
+                       eager_stages: bool = True) -> PipelineResult:
+    """Signatures come from `html` when pages has that column, else from a
+    precomputed `text` column (a text-only corpus).
+
+    eager_stages=True materializes + counts every stage (manifest-grade
     observability; the default). eager_stages=False persists only the frames
     that feed multiple consumers and defers everything else to the final
     actions — ~18 fewer Spark jobs per run, for latency-sensitive paths
@@ -114,13 +114,12 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # -- stage: prep (digest + page identity; narrow, no shuffle) ----------
     # Prune to exactly the columns downstream stages read: the prep frame is
     # cached (every stage re-reads its ROW-format blocks, where column
-    # pruning cannot help), so an unused payload column — html when text is
-    # precomputed, text when extracting from html — would double the bytes
-    # every consumer decompresses. At 100 TB the cache IS the bandwidth
-    # budget.
+    # pruning cannot help), so the payload column not processed (text when
+    # extracting from html) would double the bytes every consumer
+    # decompresses. At 100 TB the cache IS the bandwidth budget.
     # digest identity comes from the content column actually processed, so a
     # text-only table (input_hint allows html-less pages) runs end-to-end
-    content_col = "text" if use_precomputed_text else "html"
+    content_col = "html" if "html" in pages.columns else "text"
     with stage_timer(metrics, "prep") as t:
         prepped = D.with_page_id(D.with_digest(pages, content_col=content_col)) \
             .select("url", "warc_ts", "digest", "page_id", content_col)
@@ -137,42 +136,27 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     udf_parallelism = max(spark.sparkContext.defaultParallelism, 32)
 
     # -- stage: per-digest signatures (the UDF hot path, A6 rewrite).
-    # ONE fused Arrow round: html -> struct(text, sim, signature). The
-    # earlier two-step plan (extract materialized, then hash UDFs) shipped
-    # the token-weight features map out of Python and straight back in —
-    # the largest Arrow payload of the stage; fused, features never cross
-    # the process boundary and text crosses once (make_signatures_udf).
-    # Selecting the struct's fields does NOT re-evaluate the UDF: Spark
-    # extracts one ArrowEvalPython node per distinct UDF call.
+    # ONE fused Arrow round: content -> struct(text, sim, signature), from
+    # html or from a text-only table's text alike. The earlier two-step plan
+    # (extract materialized, then hash UDFs) shipped the token-weight
+    # features map out of Python and straight back in — the largest Arrow
+    # payload of the stage; fused, features never cross the process boundary
+    # and text crosses once (make_signatures_udf). Selecting the struct's
+    # fields does NOT re-evaluate the UDF: Spark extracts one
+    # ArrowEvalPython node per distinct UDF call.
     # f=64 (north-star) uses the scalar long simhash64; any other byte-
     # aligned f (the reference's PROD config is 256, conf.yml.example:2)
     # flows an array<long> of f/64 words through the same stages — the
-    # pigeonhole join, index packing and diff matrix all have parts-typed
-    # forms with identical plan shapes.
-    wide = cfg.simhash_size != 64
-    sim_col = "sim_parts" if wide else "simhash64"
+    # pigeonhole join, index packing and diff matrix pick their parts form
+    # from the column's type or name, with identical plan shapes.
+    sim_col = "simhash64" if cfg.simhash_size == 64 else "sim_parts"
     with stage_timer(metrics, "signatures") as t:
-        if use_precomputed_text:
-            feats = prepped.select("digest", "text") \
-                .dropDuplicates(["digest"]).repartition(udf_parallelism)
-            feats = scope.materialize(feats, scope.persist)
-            sim_expr = (udfs.make_simhash_parts_text_udf(
-                cfg.simhash_size, cfg.simhash_hash)("text") if wide
-                else udfs.simhash64_text_udf("text"))
-            sigs = feats.select(
-                "digest", "text",
-                sim_expr.alias(sim_col),
-                udfs.minhash128_udf("text").alias("signature"),
-            )
-        else:
-            uniq = prepped.select("digest", "html") \
-                .dropDuplicates(["digest"]).repartition(udf_parallelism)
-            fused = udfs.make_signatures_udf(cfg.simhash_size,
-                                             cfg.simhash_hash)
-            sigs = uniq.select("digest", fused("html").alias("x")) \
-                .select("digest", F.col("x.text").alias("text"),
-                        F.col(f"x.{sim_col}").alias(sim_col),
-                        F.col("x.signature").alias("signature"))
+        uniq = prepped.select("digest", content_col) \
+            .dropDuplicates(["digest"]).repartition(udf_parallelism)
+        fused = udfs.make_signatures_udf(cfg.simhash_size, cfg.simhash_hash,
+                                         from_html=content_col == "html")
+        sigs = uniq.select("digest", fused(content_col).alias("x")) \
+            .select("digest", "x.*")
         sigs = mat("signatures", sigs, t, scope.persist)
 
     # -- stage: page-level simhashes table (join back on digest). Only the
@@ -258,12 +242,8 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # -- stage: Hamming pigeonhole candidates (J2) --------------------------
     def _pigeonhole_stage() -> DataFrame:
         with stage_timer(metrics, "edges_pigeonhole") as t:
-            sim_pairs = (P.pigeonhole_candidates_parts(
-                            nd_reps, parts_col=sim_col, cfg=cfg,
-                            cache_token=token) if wide
-                         else P.pigeonhole_candidates(
-                            nd_reps, id_col=sim_col, cfg=cfg,
-                            cache_token=token))
+            sim_pairs = P.pigeonhole_candidates(
+                nd_reps, id_col=sim_col, cfg=cfg, cache_token=token)
             ph_edges = P.simhash_pairs_to_page_pairs(
                 sim_pairs, nd_reps, id_col="rep", sim_col=sim_col
             ).withColumn(
@@ -285,7 +265,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # which at 100 TB would read and sha1-hash every content byte TWICE
     # (round-5 verdict wrong #1 — measured as most of the 23.7->33.4 s
     # flagship regression at sf0.1).
-    def _embedding_stage(embedding_dim=embedding_dim) -> DataFrame | None:
+    def _embedding_stage() -> DataFrame | None:
         from wdd.operators.similarity import cosine_dup_pairs
         emb_edges = None
         with stage_timer(metrics, "edges_embedding") as t:
@@ -305,25 +285,24 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             # both verification sides) — pin it so the join/groupBy chain
             # above runs once
             emb_reps = scope.materialize(emb_reps, scope.persist)
-            if embedding_dim is None:
-                # plan-time constant (one narrow limit-1 scan of the raw
-                # pages, same class as the ledger/convergence aggregates) —
-                # the LSH hyperplane matrix shape must be known before the
-                # UDF ships
-                row = (pages.where(F.col("embedding").isNotNull())
-                       .select(F.size("embedding")).limit(1).collect())
-                embedding_dim = row[0][0] if row else 0
+            # plan-time constant (one narrow limit-1 scan of the raw pages,
+            # same class as the ledger/convergence aggregates) — the LSH
+            # hyperplane matrix shape must be known before the UDF ships
+            row = (pages.where(F.col("embedding").isNotNull())
+                   .select(F.size("embedding")).limit(1).collect())
+            embedding_dim = row[0][0] if row else 0
             if embedding_dim:
                 # auto bucket width: ~log2(n) keeps expected bucket occupancy
                 # ~1, so candidates stay ~n·tables·(bits+1) instead of
                 # n²/2^bits — at fixed bits=8, a 2.8k-vector corpus was
                 # already verifying 14% of ALL pairs (567k cosines). Count
-                # is one job over the just-pinned emb_reps.
+                # is one job over the just-pinned emb_reps. Identical or
+                # re-encoded vectors (the duplicate class this stage exists
+                # for) share codes in EVERY table at any width, so their
+                # recall is 1.0 regardless of the width chosen.
                 import math
-                bits = cfg.embedding_lsh_bits
-                if bits is None:
-                    n_emb = emb_reps.count()
-                    bits = min(16, max(8, math.ceil(math.log2(max(n_emb, 2)))))
+                n_emb = emb_reps.count()
+                bits = min(16, max(8, math.ceil(math.log2(max(n_emb, 2)))))
                 emb_edges = cosine_dup_pairs(
                     emb_reps, threshold=cfg.cosine_dup_threshold,
                     id_col="rep", vec_col="embedding", method="lsh",
@@ -365,14 +344,12 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     stage_fns = [_lsh_stage, _pigeonhole_stage]
     if "embedding" in pages.columns:
         stage_fns.append(_embedding_stage)
-    if enable_substring:
-        stage_fns.append(_substring_stage)
+    stage_fns.append(_substring_stage)
     with ThreadPoolExecutor(max_workers=len(stage_fns)) as pool:
         futures = [pool.submit(fn) for fn in stage_fns]
         results = [f.result() for f in futures]
-    lsh_edges, ph_edges = results[0], results[1]
+    lsh_edges, ph_edges, sub_edges = results[0], results[1], results[-1]
     emb_edges = results[2] if "embedding" in pages.columns else None
-    sub_edges = results[-1] if enable_substring else None
 
     # Candidate stages above persisted their exploded tables (pairs.py) for
     # the sizing+pair double read; once the edge frames are materialized
@@ -390,8 +367,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
         parts = [edges, samesim_edges, lsh_edges, ph_edges]
         if emb_edges is not None:
             parts.append(emb_edges)
-        if sub_edges is not None:
-            parts.append(sub_edges)
+        parts.append(sub_edges)
         candidate_pairs = parts[0]
         for p in parts[1:]:
             candidate_pairs = candidate_pairs.unionByName(p)

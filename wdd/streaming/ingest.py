@@ -22,19 +22,14 @@ from wdd.operators import dedup as D
 
 
 def _signature_batch(batch: DataFrame, cfg: WddConfig = DEFAULT) -> DataFrame:
-    wide = cfg.simhash_size != 64
     prepped = D.with_page_id(D.with_digest(batch))
     uniq = prepped.select("digest", "html").dropDuplicates(["digest"])
-    # same fused one-Arrow-round signature UDF as the batch pipeline
-    # (wdd/pipeline.py signatures stage) — identical kernels, so an
-    # incremental drain and a batch run produce identical rows
+    # same fused one-Arrow-round signature UDF and projection as the batch
+    # pipeline (wdd/pipeline.py signatures stage), minus text — identical
+    # kernels, so an incremental drain and a batch run produce identical rows
     fused = udfs.make_signatures_udf(cfg.simhash_size, cfg.simhash_hash)
-    sigs = uniq.select("digest", fused("html").alias("x")).select(
-        "digest",
-        F.col("x.sim_parts" if wide else "x.simhash64")
-         .alias("sim_parts" if wide else "simhash64"),
-        F.col("x.signature").alias("signature"),
-    )
+    sigs = uniq.select("digest", fused("html").alias("x")) \
+        .select("digest", "x.*").drop("text")
     return prepped.select("url", "warc_ts", "digest", "page_id") \
         .join(sigs, "digest")
 

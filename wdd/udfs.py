@@ -38,6 +38,14 @@ from wdd.kernels.surt import surt as _surt_fn
 from wdd.kernels.urls import url_fix as _url_fix_fn, url_is_valid as _url_is_valid_fn
 
 
+def _nullable(values: list) -> pd.Series:
+    """Per-row simhashes with None for empty feature bags, as an object
+    Series: pandas infers float64 for int64 values mixed with None, and
+    Arrow's unsafe cast back to long then drops the low bits of every
+    simhash in that batch."""
+    return pd.Series(values, dtype=object)
+
+
 _EXTRACT_TYPE = StructType([
     StructField("text", StringType()),
     StructField("features", MapType(StringType(), IntegerType())),
@@ -52,15 +60,18 @@ def extract_features_udf(html: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"text": texts, "features": feats})
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return pd.Series([_extract.extract_text(h) for h in html])
-
-
 def make_signatures_udf(simhash_size: int = 64,
-                        hash_name: str = DEFAULT.simhash_hash):
-    """T1+T3+MinHash fused in ONE Arrow round: html -> struct(text,
-    simhash64|sim_parts, signature).
+                        hash_name: str = DEFAULT.simhash_hash,
+                        from_html: bool = True):
+    """T1+T3+MinHash fused in ONE Arrow round: content -> struct(text,
+    simhash64|sim_parts, signature). The simhash field is the scalar long
+    `simhash64` at f=64 and the array<long> of f/64 words `sim_parts` at
+    any other byte-aligned f (the reference's prod f=256,
+    conf.yml.example:2); both come from the one batch kernel.
+
+    from_html=True extracts the text from raw html; from_html=False takes
+    already-normalized text (a text-only pages table) as the text itself,
+    with null/non-str text giving an empty feature bag (null simhash).
 
     This is the signature hot path's boundary-bytes optimization: the
     separate extract -> hash UDF plan ships the token-weight features MAP
@@ -83,28 +94,24 @@ def make_signatures_udf(simhash_size: int = 64,
     ])
 
     @pandas_udf(out_type)
-    def signatures_udf(html: pd.Series) -> pd.DataFrame:
-        texts = [_extract.extract_text(h) for h in html]
-        feats = [dict(Counter(t.split())) if t else {} for t in texts]
-        if wide:
-            sims = _simhash.simhash_parts_batch(feats, simhash_size,
-                                                hash_name)
-        else:
-            sims = list(_simhash.simhash64_batch(feats, hash_name=hash_name))
+    def signatures_udf(content: pd.Series) -> pd.DataFrame:
+        texts = ([_extract.extract_text(h) for h in content] if from_html
+                 else list(content))
+        feats = [dict(Counter(t.split())) if isinstance(t, str) and t else {}
+                 for t in texts]
+        sims = (_simhash.simhash_parts_batch(feats, simhash_size, hash_name)
+                if wide else _simhash.simhash64_batch(feats, hash_name))
         sigs = [s.tolist() for s in _minhash.minhash_batch(texts)]
-        return pd.DataFrame({
-            "text": texts,
-            ("sim_parts" if wide else "simhash64"): sims,
-            "signature": sigs,
-        })
+        return pd.DataFrame({"text": texts, sim_field.name: _nullable(sims),
+                             "signature": sigs})
     return signatures_udf
 
 
 @pandas_udf(LongType())
 def simhash64_udf(features: pd.Series) -> pd.Series:
     """T3 at f=64 with the production blake2b token hash."""
-    vec = _simhash.simhash64_batch(list(features), hash_name=DEFAULT.simhash_hash)
-    return pd.Series(vec)
+    return _nullable(_simhash.simhash64_batch(
+        list(features), hash_name=DEFAULT.simhash_hash))
 
 
 @pandas_udf(LongType())
@@ -113,8 +120,8 @@ def simhash64_text_udf(text: pd.Series) -> pd.Series:
     features = whitespace token counts, then simhash64."""
     feats = [dict(Counter(t.split())) if isinstance(t, str) and t else {}
              for t in text]
-    vec = _simhash.simhash64_batch(feats, hash_name=DEFAULT.simhash_hash)
-    return pd.Series(vec)
+    return _nullable(_simhash.simhash64_batch(
+        feats, hash_name=DEFAULT.simhash_hash))
 
 
 @pandas_udf(ArrayType(IntegerType()))
@@ -146,19 +153,6 @@ def make_simhash_parts_udf(simhash_size: int = 256,
         return pd.Series(_simhash.simhash_parts_batch(
             [dict(f) if f else {} for f in features], simhash_size, hash_name))
     return simhash_parts_udf
-
-
-def make_simhash_parts_text_udf(simhash_size: int = 256,
-                                hash_name: str = DEFAULT.simhash_hash):
-    """T1+T3 fused at parametric f for already-normalized text columns."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def simhash_parts_text_udf(text: pd.Series) -> pd.Series:
-        feats = [dict(Counter(t.split())) if isinstance(t, str) and t else {}
-                 for t in text]
-        return pd.Series(_simhash.simhash_parts_batch(feats, simhash_size,
-                                                      hash_name))
-    return simhash_parts_text_udf
 
 
 def make_parts_b64_udf(simhash_size: int | None = None):
