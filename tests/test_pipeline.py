@@ -237,6 +237,41 @@ def test_extraction_failed_pages_never_weld(spark, sf_dir):
     assert not (set(cl.values()) & real)
 
 
+def test_null_and_empty_content_are_exact_duplicates(spark, sf_dir):
+    """Null content is read as empty content: a null page keeps its
+    simhashes row (null sim) and its cluster, as an exact duplicate of an
+    empty page, and the signatures row's text is "" whichever of the two
+    dropDuplicates keeps. An ingest batch keeps a null-html page too."""
+    import datetime as _dt
+    from wdd.streaming.ingest import _signature_batch
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    base = pages.limit(60)
+    ts0 = _dt.datetime(2019, 1, 1)
+    odd = spark.createDataFrame(
+        [("http://null.example/", ts0, None, None, "en"),
+         ("http://empty.example/", ts0, bytearray(b""), "", "en")],
+        schema=base.schema)
+    odd_urls = ["http://null.example/", "http://empty.example/"]
+    res = run_dedup_pipeline(
+        spark, base.unionByName(odd).select("url", "warc_ts", "text", "lang"),
+        eager_stages=False)
+    assert res.simhashes.count() == 62 and res.clusters.count() == 62
+    sims = res.simhashes.where(F.col("url").isin(odd_urls)).collect()
+    assert len({r.digest for r in sims}) == 1
+    assert [r.simhash64 for r in sims] == [None, None]
+    assert len({r.cluster_id for r in res.clusters
+                .where(F.col("url").isin(odd_urls)).collect()}) == 1
+    assert [r.text for r in res.signatures
+            .where(F.col("digest") == sims[0].digest).collect()] == [""]
+    res.release()
+
+    rows = {r.url: r for r in _signature_batch(
+        base.limit(5).unionByName(odd)).collect()}
+    assert len(rows) == 7
+    assert rows[odd_urls[0]].digest == rows[odd_urls[1]].digest
+    assert rows[odd_urls[0]].simhash64 is None
+
+
 def test_embedding_only_duplicates_cluster(spark, sf_dir):
     """VERDICT r4 #1: the embedding-cosine edge source is a flagship
     pipeline stage. The planted embedding-only kind (disjoint tokens +

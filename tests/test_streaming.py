@@ -1,8 +1,6 @@
 """Incremental ingest: availableNow stream over pages parquet produces the
 same simhashes as the batch stage, and a rerun with the same checkpoint
 ingests nothing new (exactly-once file progress)."""
-import os
-
 from pyspark.sql import functions as F
 
 from wdd.sources.pages import synth_pages
@@ -33,98 +31,6 @@ def test_incremental_ingest_matches_batch(spark, sf_dir, tmp_path):
     # rerun: checkpoint prevents reprocessing
     run_incremental_simhash(spark, pages_dir, out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == n1
-
-
-def _write_event_file(path, rows, spark, mtime):
-    """One bare parquet FILE at `path` (the file stream source does not
-    recurse into per-write subdirectories), mtime pinned so
-    maxFilesPerTrigger=1 drains the files in deterministic order."""
-    import os
-    import shutil
-    import tempfile
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    with tempfile.TemporaryDirectory() as td:
-        df.coalesce(1).write.mode("overwrite").parquet(td + "/p")
-        part = next(f for f in os.listdir(td + "/p")
-                    if f.endswith(".parquet"))
-        shutil.copy(os.path.join(td, "p", part), str(path))
-    os.utime(path, (mtime, mtime))
-
-
-def test_windowed_counts_watermark_drops_late_rows(spark, tmp_path):
-    """Watermarked tumbling windows over a multi-batch file stream: on-time
-    windows finalize with exact counts, a row later than the watermark is
-    DROPPED (its already-finalized window is not revised), and a window the
-    final watermark never passes is withheld — the state-eviction contract
-    that lets the aggregation run forever at cluster scale."""
-    from datetime import datetime as dt
-    from wdd.streaming.windows import windowed_event_counts
-    src = tmp_path / "events"
-    src.mkdir()
-    t = lambda h, m: dt(2024, 3, 1, h, m)
-    _write_event_file(src / "f1.parquet",
-                      [(1, t(12, 0), 1.0), (1, t(12, 5), 1.0),
-                       (1, t(12, 40), 1.0)], spark, 1000)   # wm -> 12:30
-    _write_event_file(src / "f2.parquet",
-                      [(1, t(13, 20), 1.0)], spark, 2000)   # wm -> 13:10
-    # f3's 12:03 row is LATE by two batches: its window [12:00,12:10) was
-    # finalized+evicted when the watermark passed 12:30, so the stateful op
-    # must DROP it (not re-open the window) — the state-eviction contract.
-    _write_event_file(src / "f3.parquet",
-                      [(1, t(12, 3), 1.0), (1, t(14, 0), 1.0)], spark, 3000)
-    stream = (spark.readStream
-              .schema("user_id long, ts timestamp, value double")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (windowed_event_counts(stream, window="10 minutes",
-                               watermark="10 minutes")
-         .writeStream.outputMode("append").format("memory")
-         .queryName("winagg").option(
-             "checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.sql("SELECT * FROM winagg").collect()
-    got = {(r.win_start.hour, r.win_start.minute): r.n_events for r in rows}
-    assert len(rows) == 3             # no duplicate/reopened windows
-    assert got[(12, 0)] == 2          # late 12:03 row NOT counted
-    assert got[(12, 40)] == 1 and got[(13, 20)] == 1
-    assert (14, 0) not in got         # final watermark never passed 14:10
-
-
-def test_sessionize_stateful_across_batches(spark, tmp_path):
-    """applyInPandasWithState sessionization: state carries across file-
-    stream batches (a gap closes a session exactly once), and the event-time
-    timeout flushes idle sessions when the watermark passes — sessions still
-    inside the watermark remain open and unemitted."""
-    from datetime import datetime as dt
-    from wdd.streaming.windows import sessionize
-    src = tmp_path / "events"
-    src.mkdir()
-    t = lambda h, m: dt(2024, 3, 1, h, m)
-    _write_event_file(src / "f1.parquet", [(1, t(12, 0), 1.0), (1, t(12, 2), 1.0),
-                                   (2, t(12, 0), 1.0)], spark, 1000)
-    _write_event_file(src / "f2.parquet", [(1, t(12, 30), 1.0),
-                                   (9, t(15, 0), 1.0)], spark, 2000)
-    _write_event_file(src / "f3.parquet", [(9, t(15, 30), 1.0)], spark, 3000)
-    stream = (spark.readStream
-              .schema("user_id long, ts timestamp, value double")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (sessionize(stream, gap_seconds=600, watermark="30 minutes")
-         .writeStream.outputMode("append").format("memory")
-         .queryName("sessions").option(
-             "checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    got = {(r.user_id, r.session_start.strftime("%H:%M"),
-            r.session_end.strftime("%H:%M"), r.n_events)
-           for r in spark.sql("SELECT * FROM sessions").collect()}
-    assert (1, "12:00", "12:02", 2) in got   # closed by the 12:30 gap
-    assert (1, "12:30", "12:30", 1) in got   # flushed by event-time timeout
-    assert (2, "12:00", "12:00", 1) in got   # flushed by event-time timeout
-    assert (9, "15:00", "15:00", 1) in got   # closed by the 15:30 gap
-    # user 9's session opened at 15:30 is still inside the watermark
-    # (timeout 15:40 > final wm 15:00) -> open, unemitted at drain end
-    assert not any(u == 9 and s == "15:30" for (u, s, *_rest) in got)
-    assert len(got) == 4
 
 
 def test_incremental_ingest_f256_matches_batch(spark, sf_dir, tmp_path):

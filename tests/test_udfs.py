@@ -1,7 +1,14 @@
-"""UDF == kernel equivalence on real table data (SURVEY.md §5.2)."""
+"""UDF == kernel equivalence on real table data (SURVEY.md §5.2).
+
+Every UDF is compared with the driver-side kernels it wraps. Where a UDF
+takes or returns a long or an array, one test puts a null in the same Arrow
+batch (`coalesce(1)`) as real values: a boundary that guessed types would
+round every int64 in that batch."""
+import base64
+import struct
 from collections import Counter
 
-import pytest
+import numpy as np
 from pyspark.sql import functions as F
 
 from wdd.kernels import (
@@ -11,12 +18,22 @@ from wdd.kernels import (
     minhash_signature,
     surt,
 )
-from wdd.kernels.simhash import simhash_b64, simhash_parts_batch
+from wdd.kernels.simhash import (
+    pack_simhash_to_bytes,
+    simhash64_batch,
+    simhash_parts_batch,
+)
+from wdd.kernels.urls import url_fix, url_is_valid
+from wdd.operators import similarity, substring
 from wdd import udfs
 
 
 def _signed64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def _bag(text) -> dict:
+    return dict(Counter(text.split())) if text else {}
 
 
 def test_simhash64_text_udf_matches_kernel(spark, sf_dir):
@@ -33,9 +50,11 @@ def test_simhash64_text_udf_matches_kernel(spark, sf_dir):
 
 
 def test_minhash_udf_matches_kernel(spark, sf_dir):
+    """The fused UDF's minhash signature equals minhash_signature."""
     rows = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .limit(20)
-            .select("text", udfs.minhash128_udf("text").alias("sig"))
+            .select("text", udfs.make_signatures_udf(64, from_html=False)(
+                "text").getField("signature").alias("sig"))
             .collect())
     for r in rows:
         assert r.sig == minhash_signature(r.text).tolist()
@@ -43,133 +62,165 @@ def test_minhash_udf_matches_kernel(spark, sf_dir):
 
 
 def test_extract_features_udf(spark):
+    """T1 inside the fused UDF: the text is extract_text's, and the
+    simhash is that of the text's token bag (an empty page -> null)."""
     html = [
         ("<html><title>my title</title><body>abc test</body></html>",),
         ("<p>Hello, World!</p>",),
         ("",),
     ]
-    df = spark.createDataFrame(html, ["html"]) \
-        .select(udfs.extract_features_udf("html").alias("x")) \
-        .select("x.text", "x.features")
-    out = df.collect()
-    assert out[0].features == {"my": 1, "title": 1, "abc": 1, "test": 1}
+    out = spark.createDataFrame(html, ["html"]).coalesce(1) \
+        .select(udfs.make_signatures_udf(64)("html").alias("x")) \
+        .select("x.text", "x.simhash64").collect()
     assert out[0].text == extract_text(html[0][0])
-    assert out[1].features == {"hello": 1, "world": 1}
-    assert out[2].features == {}
+    assert out[0].simhash64 == _signed64(calculate_simhash(
+        {"my": 1, "title": 1, "abc": 1, "test": 1}, 64, custom_hash_function))
+    assert out[1].text == extract_text(html[1][0]) == "hello\nworld"
+    assert out[1].simhash64 == _signed64(calculate_simhash(
+        {"hello": 1, "world": 1}, 64, custom_hash_function))
+    assert out[2].text == "" and out[2].simhash64 is None
 
 
 def test_extract_features_udf_on_binary(spark):
-    df = spark.createDataFrame([(bytearray(b"<p>a b</p>"),)], "html binary") \
-        .select(udfs.extract_features_udf("html").alias("x"))
-    assert df.collect()[0].x.features == {"a": 1, "b": 1}
+    x = spark.createDataFrame([(bytearray(b"<p>a b</p>"),)], "html binary") \
+        .select(udfs.make_signatures_udf(64)("html").alias("x")) \
+        .collect()[0].x
+    assert x.text == "a b"
+    assert x.simhash64 == _signed64(calculate_simhash(
+        {"a": 1, "b": 1}, 64, custom_hash_function))
 
 
 def test_surt_and_b64_udfs(spark):
+    """The index-column UDFs on one Arrow batch that holds a null in every
+    input: a null simhash64 and a null sim_parts give a null b64, and the
+    real values beside them pack exactly (reference discover.py:71-77,
+    f=64 and the prod f=256)."""
+    h = [4921271527955783372, None, -4680126587760241616]
+    bags = [{"one": 1, "two": 2, "three": 3}, {}, {"a": 1, "b": 2}]
+    parts = simhash_parts_batch(bags, 256)
+    urls = ["http://example.com", None, ""]
     df = spark.createDataFrame(
-        [("http://example.com", 123456789)], ["url", "h"]
-    ).select(
+        list(zip(range(3), urls, h, parts)),
+        "i int, url string, h long, p array<bigint>").coalesce(1).select(
+        "i",
         udfs.surt_key_udf("url").alias("k"),
-        udfs.simhash_b64_udf("h").alias("b64"),
+        udfs.url_fix_udf("url").alias("fixed"),
         udfs.url_is_valid_udf("url").alias("valid"),
-    )
-    r = df.collect()[0]
-    assert r.k == surt("http://example.com") == "com,example)/"
-    assert r.b64 == simhash_b64(123456789, 64)
-    assert r.valid is True
+        udfs.simhash_b64_udf("h").alias("b64"),
+        udfs.make_parts_b64_udf()("p").alias("b64_256"))
+    rows = sorted(df.collect())
+    assert [r.k for r in rows] == ["com,example)/", "", ""]
+    assert rows[0].k == surt("http://example.com")
+    assert [r.fixed for r in rows] == [url_fix(urls[0]), None, ""]
+    assert [r.valid for r in rows] == [url_is_valid(u) for u in urls]
+    assert rows[0].valid is True
+    assert [r.b64 for r in rows] == [
+        base64.b64encode(struct.pack("<q", v)).decode("ascii")
+        if v is not None else None for v in h]
+    assert rows[0].b64 == "zF4Mc2HeS0Q=" and rows[2].b64 == "MJSwMKrZDL8="
+    want = [base64.b64encode(pack_simhash_to_bytes(calculate_simhash(
+                b, 256, custom_hash_function), 256)).decode("ascii")
+            if b else None for b in bags]
+    assert [r.b64_256 for r in rows] == want
+    assert len(base64.b64decode(want[0])) == 32
 
 
-def test_simhash_bytes_udf_256_reference_prod_config(spark):
-    """f=256 path (reference conf.yml.example:2): 32 little-endian bytes,
-    equal to the pure kernel + b64-roundtrip-compatible."""
-    import base64
-    from wdd.udfs import make_simhash_bytes_udf
-    udf256 = make_simhash_bytes_udf(256)
+def test_anchor_udf_matches_kernel_with_null_in_batch(spark, sf_dir):
+    """The substring anchor UDF equals batch_anchor_hashes row for row, with
+    null, empty and shorter-than-L text in the same Arrow batch."""
+    cfg_l, cfg_q = 100, 8
+    texts = [r.text for r in spark.read.parquet(
+        f"{sf_dir}/documents.parquet").limit(12).collect()]
+    texts += [None, "", "x" * (cfg_l - 1)]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string") \
+        .coalesce(1).select(
+            "i", substring._make_anchor_udf(cfg_l, cfg_q)("text").alias("a"))
+    got = [r.a for r in sorted(df.collect())]
+    want = substring.batch_anchor_hashes(texts, cfg_l, cfg_q)
+    assert got == want
+    assert got[-3:] == [[], [], []] and any(got[:-3])
+
+
+def test_multi_bucket_udf_matches_numpy(spark):
+    """The embedding stage's LSH bucket codes equal the same matmul on the
+    driver, for float vectors across several Arrow batches."""
+    dim, bits, tables = 16, 8, 4
+    rng = np.random.Generator(np.random.PCG64(7))
+    vecs = rng.standard_normal((40, dim)).astype(np.float32)
     df = spark.createDataFrame(
-        [({"one": 1, "two": 2, "three": 3},)],
-        "features map<string,int>").select(udf256("features").alias("p"))
-    packed = bytes(df.collect()[0].p)
-    assert len(packed) == 32
-    h = calculate_simhash({"one": 1, "two": 2, "three": 3}, 256,
-                          custom_hash_function)
-    from wdd.kernels.simhash import pack_simhash_to_bytes
-    assert packed == pack_simhash_to_bytes(h, 256)
-    assert base64.b64decode(base64.b64encode(packed)) == packed
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "i int, v array<float>").repartition(3)
+    got = {r.i: r.c for r in df.select(
+        "i", similarity._make_multi_bucket_udf(dim, bits, tables)("v")
+        .alias("c")).collect()}
+    H = np.concatenate([similarity._hyperplanes_seeded(
+        dim, bits, similarity._ANN_SEED + t) for t in range(tables)], axis=1)
+    codes = (((vecs.astype(np.float64) @ H) > 0).reshape(40, tables, bits)
+             @ (1 << np.arange(bits, dtype=np.int64)))
+    assert got == {i: c.tolist() for i, c in enumerate(codes)}
 
 
 def test_fused_signatures_matches_separate_udfs(spark, sf_dir):
-    """The fused one-round signatures UDF is bit-identical to the separate
-    extract -> simhash/minhash plan at BOTH widths, from html and from
-    text, and evaluates once per row even when all three struct fields are
-    selected (one ArrowEvalPython node, one udf instance in the physical
-    plan)."""
-    html_df = (spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-               .selectExpr("doc_id",
-                           "concat('<html><body><p>', text, "
-                           "'</p></body></html>') AS html"))
+    """The fused one-round signatures UDF equals the separate steps run on
+    the driver (extract_text, the token bag, simhash64_batch /
+    simhash_parts_batch, minhash_signature) at BOTH widths, from html and
+    from text, and evaluates once per row even when all three struct
+    fields are selected (one ArrowEvalPython node, one udf instance in the
+    physical plan). One partition puts null- and empty-content rows (null
+    simhash) in the same Arrow batch as the real ones, whose int64
+    simhashes must still come back exact."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
+    extra = spark.createDataFrame([(-1, None), (-2, "")],
+                                  "doc_id long, text string")
+    html40 = docs.selectExpr("doc_id",
+                             "concat('<html><body><p>', text, "
+                             "'</p></body></html>') AS html")
+    html_df = html40.unionByName(extra.withColumnRenamed("text", "html")) \
+        .coalesce(1)
+    html = {r.doc_id: r.html for r in html_df.collect()}
+    keys = sorted(html)
+    texts = {k: extract_text(html[k]) for k in keys}
+    bags = [_bag(texts[k]) for k in keys]
 
-    sep = html_df.select(
-        "doc_id", udfs.extract_features_udf("html").alias("x"))
-    sep = sep.localCheckpoint(eager=True).select(
-        "doc_id", F.col("x.text").alias("text"),
-        udfs.simhash64_udf("x.features").alias("simhash64"),
-        udfs.minhash128_udf("x.text").alias("signature"))
+    def fused64(df):
+        return df.select(
+            "doc_id", udfs.make_signatures_udf(64)("html").alias("x")) \
+            .select("doc_id", F.col("x.text").alias("text"),
+                    F.col("x.simhash64").alias("simhash64"),
+                    F.col("x.signature").alias("signature"))
+    want = {k: (texts[k], s, minhash_signature(texts[k]).tolist())
+            for k, s in zip(keys, simhash64_batch(bags))}
+    got = {r.doc_id: tuple(r)[1:] for r in fused64(html_df).collect()}
+    assert got == want and len(got) == 42
+    assert got[-1][1] is None and got[-2][1] is None
 
-    fused64 = html_df.select(
-        "doc_id", udfs.make_signatures_udf(64)("html").alias("x")) \
-        .select("doc_id", F.col("x.text").alias("text"),
-                F.col("x.simhash64").alias("simhash64"),
-                F.col("x.signature").alias("signature"))
-
-    a = {r.doc_id: r for r in sep.collect()}
-    b = {r.doc_id: r for r in fused64.collect()}
-    assert a.keys() == b.keys() and len(a) == 40
-    for k in a:
-        assert (a[k].text, a[k].simhash64, a[k].signature) == \
-            (b[k].text, b[k].simhash64, b[k].signature)
-
-    plan = fused64._jdf.queryExecution().executedPlan().toString()
+    # (a union plans one node per branch, so the plan is checked without it)
+    plan = fused64(html40)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("signatures_udf") == 1
 
-    # wide path: sim_parts must equal the separate parts UDF's output
-    sep256 = html_df.select(
-        "doc_id", udfs.extract_features_udf("html").alias("x"))
-    sep256 = sep256.localCheckpoint(eager=True).select(
-        "doc_id",
-        udfs.make_simhash_parts_udf(256)("x.features").alias("sim_parts"))
+    # wide path: sim_parts equals the parts kernel's words
     fused256 = html_df.select(
         "doc_id", udfs.make_signatures_udf(256)("html").alias("x")) \
         .select("doc_id", F.col("x.sim_parts").alias("sim_parts"))
-    a = {r.doc_id: r.sim_parts for r in sep256.collect()}
-    b = {r.doc_id: r.sim_parts for r in fused256.collect()}
-    assert a == b
+    assert {r.doc_id: r.sim_parts for r in fused256.collect()} == \
+        dict(zip(keys, simhash_parts_batch(bags, 256)))
 
     # text input (a text-only pages table): from_html=False takes the text
-    # as is. One partition puts the null-text and empty-text rows (null
-    # simhash) in the same Arrow batch as the real ones, whose int64
-    # simhashes must still come back exact.
-    text_df = (spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-               .select("doc_id", "text")
-               .unionByName(spark.createDataFrame(
-                   [(-1, None), (-2, "")], "doc_id long, text string"))
-               .coalesce(1))
+    # as is
+    text_df = docs.select("doc_id", "text").unionByName(extra).coalesce(1)
     texts = {r.doc_id: r.text for r in text_df.collect()}
-    feats = {k: dict(Counter(t.split())) if t else {}
-             for k, t in texts.items()}
-    sep_text = text_df.select(
-        "doc_id", "text",
-        udfs.simhash64_text_udf("text").alias("simhash64"),
-        udfs.minhash128_udf("text").alias("signature"))
+    feats = {k: _bag(t) for k, t in texts.items()}
     fused_text = text_df.select(
         "doc_id", udfs.make_signatures_udf(64, from_html=False)("text")
         .alias("x")).select("doc_id", "x.*")
-    a = {r.doc_id: tuple(r)[1:] for r in sep_text.collect()}
     b = {r.doc_id: tuple(r)[1:] for r in fused_text.collect()}
-    assert a == b and len(a) == 42
+    assert len(b) == 42
     for k, f in feats.items():
         assert b[k][0] == texts[k]
         assert b[k][1] == (_signed64(calculate_simhash(
             f, 64, custom_hash_function)) if f else None)
+        assert b[k][2] == minhash_signature(texts[k] or "").tolist()
     assert b[-1][1] is None and b[-2][1] is None
 
     fused_text256 = text_df.select(

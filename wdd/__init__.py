@@ -5,14 +5,14 @@ at /root/reference). The reference is a Flask+Celery+Redis service computing a
 Charikar SimHash per web capture; this package generalizes that to batch
 near-duplicate detection + clustering over columnar tables of
 Common-Crawl-style pages (url, warc_ts, html, text, lang), expressed
-Spark-first: DataFrame/SQL plans, vectorized pandas/Arrow UDFs for the hash
+Spark-first: DataFrame/SQL plans, vectorized Arrow UDFs for the hash
 kernels, LSH + Hamming-pigeonhole candidate joins, and iterative hash-min
 connected components.
 
 Layout:
   wdd.config     — pinned algorithm configuration (simhash f, minhash perms, LSH bands)
   wdd.kernels    — pure-Python/numpy kernels, fixture-pinned to the reference
-  wdd.udfs       — pandas/Arrow UDF wrappers over the kernels
+  wdd.udfs       — Arrow UDF wrappers over the kernels
   wdd.operators  — DataFrame-level operators (dedup, lsh, pigeonhole, cc, ...)
   wdd.sources    — table IO + deterministic synthetic pages generator
   wdd.pipeline   — end-to-end staged pipeline with checkpoints + metrics

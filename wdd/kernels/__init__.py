@@ -1,7 +1,7 @@
 """Pure-Python / numpy kernels, fixture-pinned to the reference.
 
 No Spark imports here — these are the single source of truth for the hash and
-extraction semantics; wdd.udfs wraps them in vectorized pandas UDFs, and the
+extraction semantics; wdd.udfs wraps them in vectorized Arrow UDFs, and the
 parity tests in tests/test_reference_parity.py pin them to the reference's
 golden fixtures (reference tests/test_discover.py, tests/test_util.py).
 """

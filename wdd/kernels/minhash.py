@@ -71,7 +71,7 @@ def minhash_signature(text: str, n_perms: int = DEFAULT.minhash_perms,
 
 def minhash_batch(texts, n_perms: int = DEFAULT.minhash_perms,
                   w: int = DEFAULT.shingle_words) -> list[np.ndarray]:
-    """Batch form used by the pandas UDF."""
+    """Batch form used by the fused signatures Arrow UDF (wdd.udfs)."""
     return [minhash_signature(t if isinstance(t, str) else "", n_perms, w)
             for t in texts]
 

@@ -23,8 +23,15 @@ from pyspark.sql import functions as F
 def with_digest(pages: DataFrame, content_col: str = "html",
                 out_col: str = "digest") -> DataFrame:
     """Content digest, JVM-side (reference uses the WBM-provided SHA-1 digest
-    per capture, discover.py:159; we derive it from the content)."""
-    return pages.withColumn(out_col, F.sha1(F.col(content_col)))
+    per capture, discover.py:159; we derive it from the content).
+
+    Null content is read as empty content, in the content column itself and
+    in its digest: a null page and an empty page are exact duplicates (same
+    digest, same null simhash), and no page drops out at a digest join."""
+    content = F.coalesce(F.col(content_col),
+                         F.lit("").cast(pages.schema[content_col].dataType))
+    return pages.withColumns({content_col: content,
+                              out_col: F.sha1(content)})
 
 
 def with_page_id(pages: DataFrame, out_col: str = "page_id") -> DataFrame:

@@ -19,9 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from wdd.scope import scope_for
@@ -168,14 +169,16 @@ def _make_multi_bucket_udf(dim: int, bits: int, tables: int):
                         for t in range(tables)], axis=1)  # (dim, tables*bits)
     weights = (1 << np.arange(bits, dtype=np.int64))
 
-    @pandas_udf(ArrayType(LongType()))
-    def multi_bucket_udf(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    @arrow_udf(ArrayType(LongType()))
+    def multi_bucket_udf(vecs: pa.Array) -> pa.Array:
+        n = len(vecs)
+        M = vecs.flatten().to_numpy(zero_copy_only=False) \
+            .astype(np.float64).reshape(n, dim)
         signs = (M @ H) > 0                                # (n, tables*bits)
-        codes = signs.reshape(len(vecs), tables, bits) @ weights  # (n, tables)
-        return pd.Series(list(codes.astype(np.int64)))
+        codes = signs.reshape(n, tables, bits) @ weights   # (n, tables)
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * tables),
+            pa.array(codes.astype(np.int64).reshape(-1)))
     return multi_bucket_udf
 
 

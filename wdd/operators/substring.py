@@ -8,7 +8,7 @@ Spark-first design — NOT a monolithic per-partition suffix array (which would
 miss every cross-partition repeat): a distributed content-defined anchor
 index, the same shape as the LSH plan, so it scales like any other equi-join:
 
-  1. `anchors` pandas UDF: per doc, rolling Karp-Rabin hash (uint64
+  1. `anchors` Arrow UDF: per doc, rolling Karp-Rabin hash (uint64
      wraparound, fully numpy-vectorized) of every L-char window; keep windows
      at content-defined positions (hash % q == 0) -> ~n/q anchors per doc.
      Identical L-char runs in two docs yield identical anchor hashes no
@@ -25,9 +25,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from wdd.config import DEFAULT, WddConfig
@@ -101,9 +102,10 @@ def batch_anchor_hashes(texts: list[str], L: int, q: int) -> list[list[int]]:
 
 
 def _make_anchor_udf(L: int, q: int):
-    @pandas_udf(ArrayType(LongType()))
-    def anchors_udf(text: pd.Series) -> pd.Series:
-        return pd.Series(batch_anchor_hashes(list(text), L, q))
+    @arrow_udf(ArrayType(LongType()))
+    def anchors_udf(text: pa.Array) -> pa.Array:
+        return pa.array(batch_anchor_hashes(text.to_pylist(), L, q),
+                        pa.list_(pa.int64()))
     return anchors_udf
 
 
