@@ -58,3 +58,37 @@ def test_crash_mid_manifest_dump_leaves_stage_unwritten(spark, tmp_path,
     assert store.exists("s")
     assert json.loads((d / "_manifest.json").read_text())["rows"] == 37
     assert store.load("s").count() == 37
+
+
+@pytest.mark.parametrize("partition_by", [None, ["bucket"]])
+def test_stage_stored_with_other_columns_is_written_again(
+        spark, tmp_path, frame, partition_by):
+    """A stored stage whose columns differ from the frame's (written by
+    code whose stage had another shape) is not resumed: the stage is
+    written again from the frame, and the next call resumes it."""
+    store = StageStore(tmp_path / "store", spark)
+    store.materialize("s", frame.drop("name"), partition_by)
+    out = store.materialize("s", frame, partition_by)
+    assert _rows(out) == _rows(frame)
+    assert store.manifest("s")["rows"] == 37
+    again = store.materialize("s", frame.limit(0), partition_by)
+    assert _rows(again) == _rows(frame)
+
+
+def test_failed_rewrite_of_other_columns_leaves_stage_unwritten(
+        spark, tmp_path, frame):
+    """A stored stage with other columns is unlinked before it is written
+    again: when that rewrite fails mid-write, the stage does not exist (the
+    old manifest does not vouch for a half-overwritten directory), and the
+    next materialize writes it whole."""
+    store = StageStore(tmp_path / "store", spark)
+    store.materialize("s", frame.drop("name"))
+    boom = frame.withColumn(
+        "name", F.when(F.col("id") == 17, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("name")))
+    with pytest.raises(Exception, match="boom"):
+        store.materialize("s", boom)
+    assert not store.exists("s")
+    out = store.materialize("s", frame)
+    assert store.manifest("s")["rows"] == 37
+    assert _rows(out) == _rows(frame)

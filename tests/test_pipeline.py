@@ -428,3 +428,54 @@ def test_embedding_column_all_null_skips_stage(spark, sf_dir):
     assert res.candidate_pairs.where(
         F.col("source") == "embedding").count() == 0
     assert res.clusters.count() == 60
+
+
+def test_signature_stage_partitions_sized_by_content_bytes(
+        spark, sf_dir, monkeypatch):
+    """The fused UDF stage gets ceil(content bytes / UDF_PARTITION_BYTES)
+    partitions once that exceeds the core count, and its largest partition
+    reads at most twice that many content bytes."""
+    import math
+    from wdd import pipeline
+
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    total = pages.agg(F.sum(F.octet_length("html"))).first()[0]
+    target = total // 10
+    monkeypatch.setattr(pipeline, "UDF_PARTITION_BYTES", target)
+    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    n = math.ceil(total / target)
+    assert n > spark.sparkContext.defaultParallelism
+    assert res.signatures.rdd.getNumPartitions() == n
+    content = (res.pages.groupBy("digest")
+               .agg(F.max(F.octet_length("html")).alias("bytes")))
+    per_part = (res.signatures
+                .select(F.spark_partition_id().alias("p"), "digest")
+                .join(content, "digest").groupBy("p")
+                .agg(F.sum("bytes").alias("bytes")).collect())
+    assert len(per_part) == n
+    assert max(r.bytes for r in per_part) <= 2 * target
+    res.release()
+
+
+def test_clusters_equal_cc_over_non_exact_candidate_pairs(spark, sf_dir):
+    """CC is fed the five near-dup edge frames directly; its clusters equal
+    those of CC over candidate_pairs minus its 'exact' rows (the route that
+    groups every page-level exact edge first), at f=64 and f=256."""
+    from wdd.config import WddConfig
+    from wdd.operators.components import connected_components
+
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    for cfg in (WddConfig(), WddConfig(simhash_size=256)):
+        res = run_dedup_pipeline(spark, pages, cfg=cfg, eager_stages=False)
+        reps = res.pages.groupBy("digest").agg(F.min("page_id").alias("rep"))
+        cc = connected_components(
+            res.candidate_pairs.where(F.col("source") != "exact")
+            .select("a", "b"), reps.select(F.col("rep").alias("id")))
+        want = (res.pages.select("page_id", "digest").join(reps, "digest")
+                .join(cc.labels.withColumnRenamed("id", "rep"), "rep", "left")
+                .select("page_id", F.coalesce("cluster_id", "rep")
+                        .alias("cluster_id")))
+        got = {(r.page_id, r.cluster_id) for r in res.clusters.collect()}
+        assert got == {(r.page_id, r.cluster_id) for r in want.collect()}
+        assert len({c for _, c in got}) < len(got)  # some pages merged
+        res.release()

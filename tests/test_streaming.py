@@ -148,3 +148,24 @@ def test_streaming_manifest_dedups_replayed_batches(spark, tmp_path):
     # the manifest view is exactly-once
     assert spark.read.parquet(out_dir).count() == 10
     assert store.load("ingest_1").count() == 5
+
+
+def test_signature_batch_has_no_anchors_or_text(spark, sf_dir, tmp_path):
+    """The ingest sink's signature stage calls the fused UDF without an
+    anchor window: its schema is the same at f=64 and f=256 (no `anchors`,
+    no `text`), and its optimized plan computes no anchors."""
+    from wdd.config import WddConfig
+    from wdd.streaming.ingest import _signature_batch
+
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False)
+    pages.limit(20).write.parquet(str(tmp_path / "pages"))
+    batch = spark.read.parquet(str(tmp_path / "pages"))
+    for f, sim in ((64, "bigint"), (256, "array<bigint>")):
+        out = _signature_batch(batch, WddConfig(simhash_size=f))
+        name = "simhash64" if f == 64 else "sim_parts"
+        assert out.dtypes == [
+            ("digest", "string"), ("url", "string"),
+            ("warc_ts", "timestamp"), ("page_id", "bigint"), (name, sim),
+            ("signature", "array<int>")]
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "anchors" not in plan

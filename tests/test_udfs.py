@@ -230,3 +230,39 @@ def test_fused_signatures_matches_separate_udfs(spark, sf_dir):
     want = dict(zip(keys, simhash_parts_batch([feats[k] for k in keys], 256)))
     assert {r.doc_id: r.sim_parts for r in fused_text256.collect()} == want
     assert want[-1] is None and want[-2] is None
+
+
+def test_fused_anchors_match_kernel_with_null_in_batch(spark, sf_dir):
+    """With an anchor window the fused UDF's `anchors` field equals
+    batch_anchor_hashes over the text it extracted, row for row, from html
+    and from text, at f=64 and f=256, with null, empty and shorter-than-L
+    content in the same Arrow batch as the real rows. Without a window the
+    struct has no `anchors` field."""
+    L, q = 100, 8
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(12)
+    extra = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "x" * (L - 1))],
+        "doc_id long, text string")
+    text_df = docs.select("doc_id", "text").unionByName(extra).coalesce(1)
+    html_df = text_df.selectExpr(
+        "doc_id", "CASE WHEN text IS NULL THEN NULL ELSE concat("
+        "'<html><body><p>', text, '</p></body></html>') END AS html") \
+        .coalesce(1)
+    for from_html, df, col in ((True, html_df, "html"),
+                               (False, text_df, "text")):
+        content = {r.doc_id: r[col] for r in df.collect()}
+        keys = sorted(content)
+        texts = [extract_text(content[k]) if from_html else content[k]
+                 for k in keys]
+        want = dict(zip(keys, substring.batch_anchor_hashes(texts, L, q)))
+        assert any(want.values()) and want[-1] == want[-2] == want[-3] == []
+        for f in (64, 256):
+            fused = udfs.make_signatures_udf(f, from_html=from_html,
+                                             anchor_window=(L, q))
+            out = df.select("doc_id", fused(col).alias("x"))
+            got = {r.doc_id: r.anchors
+                   for r in out.select("doc_id", "x.anchors").collect()}
+            assert got == want, (from_html, f)
+            plain = df.select(udfs.make_signatures_udf(
+                f, from_html=from_html)(col).alias("x")).select("x.*")
+            assert "anchors" not in plain.columns

@@ -56,14 +56,21 @@ class StageStore:
 
     def materialize(self, stage: str, df: DataFrame,
                     partition_by: list[str] | None = None) -> DataFrame:
-        """Write-once: if the stage manifest exists, return the stored data
-        (resume path); otherwise write parquet, then the manifest (manifest
-        last, fsynced and moved into place whole, so a crashed write is
-        retried, never half-trusted). The row count comes from the parquet
-        footers and, without `partition_by`, the read-back reuses `df`'s
-        schema, so neither costs a Spark job."""
+        """Write-once: if the stage manifest exists and the stored data has
+        `df`'s columns, return it (resume path); otherwise write parquet,
+        then the manifest (manifest last, fsynced and moved into place
+        whole, so a crashed write is retried, never half-trusted). The row
+        count comes from the parquet footers and, without `partition_by`,
+        the read-back reuses `df`'s schema, so neither costs a Spark job."""
         if self.exists(stage):
-            return self.load(stage)
+            stored = self.load(stage)
+            if set(stored.columns) == set(df.columns):
+                return stored
+            # stored with other columns (by code whose stage had another
+            # shape): it cannot stand in for this one. Unlink its manifest
+            # first, so the rewrite is an ordinary first write and a crash
+            # mid-write leaves the stage unwritten, not half-trusted.
+            self._manifest(stage).unlink()
         t0 = time.monotonic()
         path = self._dir(stage) / "data"
         writer = df.write.mode("overwrite")

@@ -25,10 +25,11 @@ collection with the result.
 Driver finish: contraction is for graphs too big for one process. Once
 the edge list holds at most DRIVER_EDGES edges — at CC entry or after any
 sync — connected_components collects it once and labels it on the driver
-(numpy min-label hooking + pointer jumping), so a small graph costs two
-Spark jobs instead of four checkpointed contractions per sync. Every
-contraction preserves components and keeps each component's minimum, so
-finishing from any intermediate edge list gives the same labels.
+(numpy min-label hooking + pointer jumping). At entry that is one collect
+of at most DRIVER_EDGES + 1 deduplicated edges, which either holds the
+whole graph or sends it to contraction. Every contraction preserves
+components and keeps each component's minimum, so finishing from any
+intermediate edge list gives the same labels.
 """
 
 from __future__ import annotations
@@ -81,14 +82,19 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def _driver_labels(e: DataFrame) -> DataFrame:
-    """(id, label) for every endpoint of edge list e, label = the min id of
-    its component, from one collect of e. Ids are compacted by np.unique,
-    which sorts them, so a component's min index is its min id. Each pass
-    hooks every tree root onto the smallest root across its cross-tree
-    edges (parent[v] <= v throughout, so no cycles), then jumps pointers
-    until every node points at its root; edges inside one tree stay inside
-    it and are dropped."""
-    t = e.toArrow()
+    """(id, label) for every endpoint of edge list e, from one collect of
+    e (_arrow_labels)."""
+    return _arrow_labels(e.sparkSession, e.toArrow())
+
+
+def _arrow_labels(spark, t: pa.Table) -> DataFrame:
+    """(id, label) for every endpoint of the (a, b) edges in t, label = the
+    min id of its component. Ids are compacted by np.unique, which sorts
+    them, so a component's min index is its min id. Each pass hooks every
+    tree root onto the smallest root across its cross-tree edges
+    (parent[v] <= v throughout, so no cycles), then jumps pointers until
+    every node points at its root; edges inside one tree stay inside it and
+    are dropped."""
     a = np.asarray(t.column("a"), dtype=np.int64)
     b = np.asarray(t.column("b"), dtype=np.int64)
     ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
@@ -101,8 +107,7 @@ def _driver_labels(e: DataFrame) -> DataFrame:
         np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
         while not np.array_equal(jumped := parent[parent], parent):
             parent = jumped
-    return e.sparkSession.createDataFrame(
-        pa.table({"id": ids, "label": ids[parent]}))
+    return spark.createDataFrame(pa.table({"id": ids, "label": ids[parent]}))
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
@@ -113,9 +118,10 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     nodes. Returns every vertex labeled with cluster_id = its component min.
 
     Contraction runs only while the edge list holds more than DRIVER_EDGES
-    edges (counted at entry and after every sync); at or below it the
-    current edge list is labeled on the driver (_driver_labels) and the
-    result is converged.
+    edges; at or below it the current edge list is labeled on the driver
+    and the result is converged. At entry one collect of at most
+    DRIVER_EDGES + 1 deduplicated edges decides (a small graph costs that
+    one collect); after every sync the signature's count does.
 
     rounds_per_sync (which matters only above DRIVER_EDGES) chains that
     many large+small contraction rounds into ONE materialization +
@@ -135,11 +141,19 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     # tokenless: a private scope, so the result's checkpoints stay
     # unreferenced and Spark's ContextCleaner frees them once it is dropped
     scope = RunScope(None) if cache_token is None else scope_for(cache_token)
-    e = scope.checkpoint(  # materialized by the first _signature
+    e = scope.checkpoint(
         edges.select(F.col("a").cast("long").alias("a"),
                      F.col("b").cast("long").alias("b"))
         .where(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"]))
+    # the entry collect runs over every partition of e, so it also fills
+    # the checkpoint: a graph too big for the driver contracts from those
+    # blocks without deduplicating its edges a second time
+    small = e.limit(DRIVER_EDGES + 1).toArrow()
+    if small.num_rows <= DRIVER_EDGES:
+        scope.drop(e)  # collected: its blocks are dead
+        return _finish(_arrow_labels(e.sparkSession, small), vertices,
+                       0, True)
 
     def _signature(edges_df) -> tuple:
         """Order-insensitive edge-set fingerprint in ONE cheap aggregate
@@ -203,6 +217,12 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
             .join(labels.select("id"), "id", "left_anti") \
             .withColumn("label", F.col("id"))
         labels = labels.union(centers)
+    return _finish(labels, vertices, iterations, converged)
+
+
+def _finish(labels: DataFrame, vertices: DataFrame | None, iterations: int,
+            converged: bool) -> CCResult:
+    """Label every vertex that no edge touches with itself."""
     if vertices is not None:
         isolated = (vertices.select(F.col("id").cast("long").alias("id"))
                     .dropDuplicates(["id"])

@@ -8,11 +8,14 @@ Spark-first design — NOT a monolithic per-partition suffix array (which would
 miss every cross-partition repeat): a distributed content-defined anchor
 index, the same shape as the LSH plan, so it scales like any other equi-join:
 
-  1. `anchors` Arrow UDF: per doc, rolling Karp-Rabin hash (uint64
-     wraparound, fully numpy-vectorized) of every L-char window; keep windows
-     at content-defined positions (hash % q == 0) -> ~n/q anchors per doc.
-     Identical L-char runs in two docs yield identical anchor hashes no
-     matter where they sit — catches cross-partition repeats by construction.
+  1. anchors per doc (wdd.kernels.anchors): rolling Karp-Rabin hash
+     (uint64 wraparound, fully numpy-vectorized) of every L-char window;
+     keep windows at content-defined positions (hash % q == 0) -> ~n/q
+     anchors per doc. Identical L-char runs in two docs yield identical
+     anchor hashes no matter where they sit — catches cross-partition
+     repeats by construction. The batch pipeline gets them from the fused
+     signature UDF (one Python round per digest); given a text column
+     instead, the `anchors` Arrow UDF here computes them.
   2. explode -> groupBy(anchor) -> JVM pair expansion (one shuffle).
   3. verify: join both texts per candidate pair and compute the true longest
      common substring with a numpy suffix array + Kasai LCP inside
@@ -32,73 +35,9 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from wdd.config import DEFAULT, WddConfig
+from wdd.kernels.anchors import batch_anchor_hashes, rolling_anchor_hashes  # noqa: F401
 from wdd.operators.pairs import dedup_pairs, pairs_from_groups_scalable
 from wdd.scope import scope_for
-
-_B = np.uint64(1000003)  # odd polynomial base; arithmetic wraps mod 2^64
-
-
-def rolling_anchor_hashes(text: str, L: int, q: int) -> np.ndarray:
-    """int64 hashes of the L-char windows at content-defined anchor positions."""
-    if not text or len(text) < L:
-        return np.empty(0, dtype=np.int64)
-    c = np.frombuffer(text.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    n = c.size
-    if n < L:
-        return np.empty(0, dtype=np.int64)
-    with np.errstate(over="ignore"):
-        # win[i] = sum_{j<L} c[i+j] * B^(L-1-j)  (mod 2^64) — computed as L
-        # shifted vector multiply-adds: O(n*L) uint64 ops, all numpy-side.
-        powers = np.empty(L, dtype=np.uint64)
-        powers[0] = 1
-        if L > 1:
-            np.multiply.accumulate(np.full(L - 1, _B, dtype=np.uint64),
-                                   out=powers[1:])
-        m = n - L + 1
-        win = np.zeros(m, dtype=np.uint64)
-        cu = c.astype(np.uint64)
-        for j in range(L):
-            win += cu[j:j + m] * powers[L - 1 - j]
-    anchored = win[win % np.uint64(q) == 0]
-    return np.unique(anchored).view(np.int64)
-
-
-def batch_anchor_hashes(texts: list[str], L: int, q: int) -> list[list[int]]:
-    """Whole-batch anchor hashing: one rolling-hash pass over the
-    concatenated batch with boundary masking — the L-term multiply-add loop
-    runs once per Arrow batch instead of once per document (~5-10x on short
-    docs). Windows that straddle a document boundary are masked out, so the
-    result per doc is exactly rolling_anchor_hashes(doc)."""
-    enc = [t.encode("utf-8", "surrogatepass") if isinstance(t, str) else b""
-           for t in texts]
-    lens = np.fromiter((len(e) for e in enc), dtype=np.int64, count=len(enc))
-    n = int(lens.sum())
-    if n == 0 or n < L:
-        return [[] for _ in texts]
-    c = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    starts = np.concatenate(([0], np.cumsum(lens)))[:-1]
-    with np.errstate(over="ignore"):
-        powers = np.empty(L, dtype=np.uint64)
-        powers[0] = 1
-        if L > 1:
-            np.multiply.accumulate(np.full(L - 1, _B, dtype=np.uint64),
-                                   out=powers[1:])
-        m = n - L + 1
-        win = np.zeros(m, dtype=np.uint64)
-        cu = c.astype(np.uint64)
-        for j in range(L):
-            win += cu[j:j + m] * powers[L - 1 - j]
-    anchored_pos = np.nonzero(win % np.uint64(q) == 0)[0]
-    # window at global pos p belongs to doc d iff it lies fully inside d
-    doc_idx = np.searchsorted(starts, anchored_pos, side="right") - 1
-    ends = starts + lens
-    valid = anchored_pos + L <= ends[doc_idx]
-    anchored_pos, doc_idx = anchored_pos[valid], doc_idx[valid]
-    out: list[list[int]] = [[] for _ in texts]
-    vals = win[anchored_pos].view(np.int64)
-    for d, v in zip(doc_idx, vals):
-        out[d].append(int(v))
-    return [sorted(set(v)) for v in out]
 
 
 def _make_anchor_udf(L: int, q: int):
@@ -112,12 +51,19 @@ def _make_anchor_udf(L: int, q: int):
 def anchor_candidates(docs: DataFrame, id_col: str, text_col: str,
                       cfg: WddConfig = DEFAULT,
                       cache_token: str | None = None) -> DataFrame:
-    """Candidate pairs of docs sharing >=1 exact L-char anchored window."""
-    udf = _make_anchor_udf(cfg.min_overlap_chars, cfg.anchor_modulus)
-    # rolling_anchor_hashes returns np.unique output, so (id, anchor) rows
-    # are already distinct — no dedup shuffle needed here
-    exploded = docs.select(F.col(id_col),
-                           F.explode(udf(text_col)).alias("anchor"))
+    """Candidate pairs of docs sharing >=1 exact L-char anchored window.
+
+    text_col is picked by its type: an array<long> column holds each doc's
+    anchors already (the fused signature UDF's `anchors` field, computed
+    with cfg's window) and is exploded as it is; a string column is hashed
+    by the anchor Arrow UDF first."""
+    anchors = F.col(text_col)
+    if not isinstance(docs.schema[text_col].dataType, ArrayType):
+        anchors = _make_anchor_udf(cfg.min_overlap_chars,
+                                   cfg.anchor_modulus)(anchors)
+    # batch_anchor_hashes returns each doc's anchors sorted and distinct, so
+    # (id, anchor) rows are already distinct — no dedup shuffle needed here
+    exploded = docs.select(F.col(id_col), F.explode(anchors).alias("anchor"))
     pairs = pairs_from_groups_scalable(
         exploded, ["anchor"], id_col,
         cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,

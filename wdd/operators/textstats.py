@@ -152,7 +152,7 @@ def ngram_bottomk_sketch(df: DataFrame, text_col: str = "text",
 
 
 def _make_winnow_udf(L: int, q: int, k: int):
-    from wdd.operators.substring import batch_anchor_hashes
+    from wdd.kernels.anchors import batch_anchor_hashes
 
     @pandas_udf(ArrayType(LongType()))
     def winnow_udf(text: pd.Series) -> pd.Series:

@@ -2,10 +2,12 @@
 
 Spark equivalent of the reference's whole task lifecycle (SURVEY.md §3.1):
 
-  pages --digest--> distinct digests --extract/simhash/minhash UDFs-->
-  per-digest signatures --join back--> page-level simhashes table;
-  candidate edges from {exact J3, LSH J1, pigeonhole J2, substring} -->
-  star-contraction connected components J4 --> clusters.
+  pages --digest--> distinct digests --ONE fused Arrow UDF (text, simhash,
+  minhash, substring anchors)--> per-digest signatures --join back-->
+  page-level simhashes table; near-dup edges between digest reps from
+  {samesim, LSH J1, pigeonhole J2, embedding, substring} --> connected
+  components J4 --> clusters (pages sharing a digest share their rep's
+  label; the exact J3 edges go to candidate_pairs only).
 
 Design invariants:
   * the expensive UDFs run ONCE per distinct digest (bulk form of the
@@ -32,6 +34,11 @@ from wdd.operators.components import connected_components
 from wdd.operators.substring import substring_candidates
 from wdd.scope import _SCOPES, RunScope
 
+# content bytes per signature-UDF partition: the fused UDF's tasks are sized
+# by the bytes they read, so a small batch gets a few tasks (the per-task
+# Python cost dominates there) and a large corpus many bounded ones
+UDF_PARTITION_BYTES = 32 << 20
+
 
 def _frame(name: str) -> property:
     def get(self) -> DataFrame:
@@ -49,7 +56,8 @@ class PipelineResult:
     a dropped checkpoint block.
 
       pages            + digest, page_id
-      signatures       per-digest: digest, text, simhash64|sim_parts, signature
+      signatures       per-digest: digest, text, simhash64|sim_parts,
+                       signature, anchors (substring anchors of the text)
       simhashes        page-level: url, warc_ts, digest, page_id, simhash64|sim_parts
       candidate_pairs  a, b (page_id), source, score
       clusters         page_id, url, warc_ts, cluster_id
@@ -125,19 +133,32 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             .select("url", "warc_ts", "digest", "page_id", content_col)
         prepped = mat("prep", prepped, t, scope.persist)
 
-    # The expensive-UDF stages must stay wide: AQE coalesces the small
-    # dropDuplicates shuffle to 1 partition on small inputs, which would
-    # serialize the Arrow/Python work onto one core. Explicitly spread the
-    # per-digest rows across the executor slots (cheap: rows are small).
-    # floor of 32: at tiny core counts defaultParallelism alone would put
-    # hundreds of MB of rows in one partition feeding Arrow (observed task
-    # OOM at local[2] on a 450k-page corpus); more, smaller partitions cost
-    # nothing and bound per-task memory.
-    udf_parallelism = max(spark.sparkContext.defaultParallelism, 32)
+    # The fused UDF stage is sized by the bytes it reads, not by cores:
+    # AQE coalesces the small dropDuplicates shuffle to 1 partition on small
+    # inputs (serializing the Python work onto one core), so the distinct
+    # digests are spread explicitly over max(defaultParallelism,
+    # ceil(content bytes / UDF_PARTITION_BYTES)) partitions. The byte term
+    # bounds per-task input on a large corpus (a core-count-only width once
+    # put hundreds of MB into one Arrow task: a task OOM at local[2] on a
+    # 450k-page corpus; 32 MiB is a chosen bound, not a measured limit); on
+    # a small batch it leaves one task per core, where each extra Python
+    # task costs more than its rows. The bytes are octet_length over the
+    # page-level prep frame, exact duplicates included, so they overstate
+    # the distinct digests' bytes and the width errs wide. In a storeless
+    # run this aggregate also fills the prep cache the stage below reads;
+    # with a StageStore it is one more scan of the stored prep stage.
+    # Catalyst's sizeInBytes estimate is no substitute (it reads orders of
+    # magnitude high for a scan and Long.MaxValue for an RDD-backed frame).
+    content_bytes = prepped.agg(
+        F.sum(F.octet_length(content_col))).first()[0] or 0
+    udf_parallelism = max(spark.sparkContext.defaultParallelism,
+                          -(-content_bytes // UDF_PARTITION_BYTES))
 
     # -- stage: per-digest signatures (the UDF hot path, A6 rewrite).
-    # ONE fused Arrow round: content -> struct(text, sim, signature), from
-    # html or from a text-only table's text alike. The earlier two-step plan
+    # ONE fused Arrow round: content -> struct(text, sim, signature,
+    # anchors), from html or from a text-only table's text alike; it is the
+    # run's only Python round per digest (the substring stage explodes the
+    # anchors computed here). The earlier two-step plan
     # (extract materialized, then hash UDFs) shipped the token-weight
     # features map out of Python and straight back in — the largest Arrow
     # payload of the stage; fused, features never cross the process boundary
@@ -153,8 +174,10 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     with stage_timer(metrics, "signatures") as t:
         uniq = prepped.select("digest", content_col) \
             .dropDuplicates(["digest"]).repartition(udf_parallelism)
-        fused = udfs.make_signatures_udf(cfg.simhash_size, cfg.simhash_hash,
-                                         from_html=content_col == "html")
+        fused = udfs.make_signatures_udf(
+            cfg.simhash_size, cfg.simhash_hash,
+            from_html=content_col == "html",
+            anchor_window=(cfg.min_overlap_chars, cfg.anchor_modulus))
         sigs = uniq.select("digest", fused(content_col).alias("x")) \
             .select("digest", "x.*")
         sigs = mat("signatures", sigs, t, scope.persist)
@@ -176,8 +199,10 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # digest representative page (min page_id) — candidate graph runs on
     # reps. The rep id comes from a NARROW (digest, page_id) aggregate over
     # prepped pages (16 B/row shuffle), then ONE per-digest join attaches
-    # simhash64 + signature; the old formulation re-shuffled page-level rows
-    # carrying the signature array through groupBy(digest).
+    # simhash64 + signature; the old formulation re-shuffled page-level
+    # rows carrying the signature array through groupBy(digest). The
+    # anchors stay out: every near-dup stage rescans this cache, and the
+    # anchors are about as large as the text.
     rep_ids = prepped.groupBy("digest").agg(F.min("page_id").alias("rep"))
     reps = rep_ids.join(
         sigs.select("digest", sim_col, "signature").hint("shuffle_hash"),
@@ -285,23 +310,20 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             # both verification sides) — pin it so the join/groupBy chain
             # above runs once
             emb_reps = scope.materialize(emb_reps, scope.persist)
-            # plan-time constant (one narrow limit-1 scan of the raw pages,
-            # same class as the ledger/convergence aggregates) — the LSH
-            # hyperplane matrix shape must be known before the UDF ships
-            row = (pages.where(F.col("embedding").isNotNull())
-                   .select(F.size("embedding")).limit(1).collect())
-            embedding_dim = row[0][0] if row else 0
+            # plan-time constants, from ONE aggregate over the just-pinned
+            # emb_reps (which fills its cache): the LSH hyperplane matrix
+            # shape must be known before the UDF ships, and the auto bucket
+            # width ~log2(n) keeps expected bucket occupancy ~1, so
+            # candidates stay ~n·tables·(bits+1) instead of n²/2^bits — at
+            # fixed bits=8, a 2.8k-vector corpus was already verifying 14%
+            # of ALL pairs (567k cosines). Identical or re-encoded vectors
+            # (the duplicate class this stage exists for) share codes in
+            # EVERY table at any width, so their recall is 1.0 regardless
+            # of the width chosen.
+            n_emb, embedding_dim = emb_reps.agg(
+                F.count(F.lit(1)), F.max(F.size("embedding"))).first()
             if embedding_dim:
-                # auto bucket width: ~log2(n) keeps expected bucket occupancy
-                # ~1, so candidates stay ~n·tables·(bits+1) instead of
-                # n²/2^bits — at fixed bits=8, a 2.8k-vector corpus was
-                # already verifying 14% of ALL pairs (567k cosines). Count
-                # is one job over the just-pinned emb_reps. Identical or
-                # re-encoded vectors (the duplicate class this stage exists
-                # for) share codes in EVERY table at any width, so their
-                # recall is 1.0 regardless of the width chosen.
                 import math
-                n_emb = emb_reps.count()
                 bits = min(16, max(8, math.ceil(math.log2(max(n_emb, 2)))))
                 emb_edges = cosine_dup_pairs(
                     emb_reps, threshold=cfg.cosine_dup_threshold,
@@ -315,14 +337,15 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                                 scope.checkpoint)
         return emb_edges
 
-    # -- stage: substring-overlap candidates (anchor hashing) ---------------
+    # -- stage: substring-overlap candidates (anchor hashing): the anchors
+    # came out of the fused signature UDF, so this stage is JVM-only: one
+    # narrow per-digest join puts each rep id on its digest's anchors ----
     def _substring_stage() -> DataFrame:
         with stage_timer(metrics, "edges_substring") as t:
-            rep_texts = sigs.join(reps.select("digest", "rep"), "digest") \
-                .select(F.col("rep").alias("id"), "text") \
-                .repartition(udf_parallelism)
+            rep_anchors = reps.select("digest", "rep").join(
+                sigs.select("digest", "anchors"), "digest")
             sub_edges = substring_candidates(
-                rep_texts, id_col="id", text_col="text", cfg=cfg,
+                rep_anchors, id_col="rep", text_col="anchors", cfg=cfg,
                 cache_token=token,
             ).select("a", "b", "source", "score")
             return mat("edges_substring", sub_edges, t, scope.checkpoint)
@@ -330,7 +353,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # The four near-dup candidate sources are independent given the shared
     # persisted frames (prep/sigs/reps/simhashes), but each blocks the
     # driver mid-build: the mega-group sizing probe (pairs.py sizes.isEmpty)
-    # per candidate source, plus the embedding stage's dim/count aggregates.
+    # per candidate source, plus the embedding stage's sizing aggregate.
     # Run them as CONCURRENT driver jobs (guide §2.6): Spark's scheduler
     # runs several jobs at once inside one application, so each probe's
     # tasks back-fill the executor slots another probe's tail leaves idle
@@ -360,16 +383,19 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     if scope.eager or store is not None:
         scope.drop(*scope.persisted)
 
-    # -- stage: union candidate pairs ---------------------------------------
+    # -- stage: union candidate pairs --------------------------------------
+    # The page-level view of every edge, for its readers (manifests, tests,
+    # diagnostics); CC below does not read it, so in a lazy run nothing
+    # computes it unless a caller does.
+    near_dup = [samesim_edges, lsh_edges, ph_edges]
+    if emb_edges is not None:
+        near_dup.append(emb_edges)
+    near_dup.append(sub_edges)
     with stage_timer(metrics, "candidate_pairs") as t:
-        edges = exact_edges.select("a", "b").withColumn("source", F.lit("exact")) \
+        candidate_pairs = exact_edges.select("a", "b") \
+            .withColumn("source", F.lit("exact")) \
             .withColumn("score", F.lit(1.0))
-        parts = [edges, samesim_edges, lsh_edges, ph_edges]
-        if emb_edges is not None:
-            parts.append(emb_edges)
-        parts.append(sub_edges)
-        candidate_pairs = parts[0]
-        for p in parts[1:]:
+        for p in near_dup:
             candidate_pairs = candidate_pairs.unionByName(p)
         candidate_pairs = candidate_pairs.groupBy("a", "b").agg(
             F.min("source").alias("source"), F.max("score").alias("score"))
@@ -377,19 +403,24 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                               scope.persist)
 
     # -- stage: connected components (J4) -----------------------------------
-    # CC runs on the digest-representative graph ONLY: exact-dup star edges
-    # never enter the iterative rounds — pages sharing a digest inherit their
-    # rep's label through the digest->rep join below. Because rep = min
-    # page_id of its digest group, the component-min over reps equals the
-    # component-min over all member pages, so cluster ids are IDENTICAL to
-    # running CC on the full page graph while the iterated edge set shrinks
-    # from O(|pages|) to O(|distinct contents|) — the dominant saving on
+    # CC runs on the digest-representative graph ONLY, fed straight from the
+    # five near-dup edge frames: exact-dup star edges never enter it — pages
+    # sharing a digest inherit their rep's label through the digest->rep
+    # join below. (A near-dup edge joins reps of two DISTINCT digests, so no
+    # near-dup edge is also an exact edge: this is the edge set of
+    # candidate_pairs minus its 'exact' rows, without grouping the
+    # page-level exact edges first.) Because rep = min page_id of its
+    # digest group, the component-min over reps equals the component-min
+    # over all member pages, so cluster ids are IDENTICAL to running CC on
+    # the full page graph while the iterated edge set shrinks from
+    # O(|pages|) to O(|distinct contents|) — the dominant saving on
     # boilerplate-heavy web corpora where exact dups are the majority.
     with stage_timer(metrics, "clusters") as t:
+        cc_edges = near_dup[0].select("a", "b")
+        for p in near_dup[1:]:
+            cc_edges = cc_edges.union(p.select("a", "b"))
         rep_vertices = reps.select(F.col("rep").alias("id"))
-        cc = connected_components(
-            candidate_pairs.where(F.col("source") != "exact").select("a", "b"),
-            rep_vertices, cache_token=token)
+        cc = connected_components(cc_edges, rep_vertices, cache_token=token)
         clusters = (
             simhashes.select("url", "warc_ts", "page_id", "digest")
             .join(reps.select("digest", "rep"), "digest")

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from wdd.config import DEFAULT
+from wdd.kernels import anchors as _anchors
 from wdd.kernels import extract as _extract
 from wdd.kernels import minhash as _minhash
 from wdd.kernels import simhash as _simhash
@@ -56,34 +57,43 @@ def _b64(values: list, pack) -> pa.Array:
 
 def make_signatures_udf(simhash_size: int = 64,
                         hash_name: str = DEFAULT.simhash_hash,
-                        from_html: bool = True):
+                        from_html: bool = True,
+                        anchor_window: tuple[int, int] | None = None):
     """T1+T3+MinHash fused in ONE Arrow round: content -> struct(text,
-    simhash64|sim_parts, signature). The simhash field is the scalar long
-    `simhash64` at f=64 and the array<long> of f/64 words `sim_parts` at
-    any other byte-aligned f (the reference's prod f=256,
+    simhash64|sim_parts, signature[, anchors]). The simhash field is the
+    scalar long `simhash64` at f=64 and the array<long> of f/64 words
+    `sim_parts` at any other byte-aligned f (the reference's prod f=256,
     conf.yml.example:2); both come from the one batch kernel.
 
     from_html=True extracts the text from raw html; from_html=False takes
     already-normalized text (a text-only pages table) as the text itself,
     with null text giving an empty feature bag (null simhash).
 
+    anchor_window=(L, q) adds an `anchors` array<long> field: the substring
+    anchors of the text (batch_anchor_hashes, L-char windows kept at 1 in q
+    positions), so the substring stage needs no second Python round over
+    the text. Without it the struct has no such field.
+
     Token-weight features never cross the process boundary and text crosses
     once; the outputs are bit-identical to the driver-side kernels
-    (extract_text, simhash_parts_batch, minhash_signature — pinned by
-    tests/test_udfs.py). Safe under column pruning/collapse: Spark extracts
-    one ArrowEvalPython node per distinct UDF call, so selecting all three
-    struct fields still evaluates the UDF once per row."""
+    (extract_text, simhash_parts_batch, minhash_signature,
+    batch_anchor_hashes — pinned by tests/test_udfs.py). Safe under column
+    pruning/collapse: Spark extracts one ArrowEvalPython node per distinct
+    UDF call, so selecting every struct field still evaluates the UDF once
+    per row."""
     wide = simhash_size != 64
     sim_name = "sim_parts" if wide else "simhash64"
     sim_type = ArrayType(LongType()) if wide else LongType()
-    out_type = StructType([
+    fields = [
         StructField("text", StringType()),
         StructField(sim_name, sim_type),
         StructField("signature", ArrayType(IntegerType())),
-    ])
+    ]
+    if anchor_window is not None:
+        fields.append(StructField("anchors", ArrayType(LongType())))
     sim_arrow = pa.list_(pa.int64()) if wide else pa.int64()
 
-    @arrow_udf(out_type)
+    @arrow_udf(StructType(fields))
     def signatures_udf(content: pa.Array) -> pa.Array:
         values = content.to_pylist()
         texts = ([_extract.extract_text(h) for h in values] if from_html
@@ -97,10 +107,14 @@ def make_signatures_udf(simhash_size: int = 64,
         signature = pa.ListArray.from_arrays(
             pa.array(np.arange(len(texts) + 1, dtype=np.int32)
                      * DEFAULT.minhash_perms), pa.array(sigs))
-        return pa.StructArray.from_arrays(
-            [pa.array(texts, pa.string()), pa.array(sims, sim_arrow),
-             signature],
-            names=["text", sim_name, "signature"])
+        arrays = [pa.array(texts, pa.string()), pa.array(sims, sim_arrow),
+                  signature]
+        if anchor_window is not None:
+            arrays.append(pa.array(
+                _anchors.batch_anchor_hashes(texts, *anchor_window),
+                pa.list_(pa.int64())))
+        return pa.StructArray.from_arrays(arrays,
+                                          names=[f.name for f in fields])
     return signatures_udf
 
 
