@@ -122,6 +122,8 @@ def test_simhash_index_layout(pipeline_result, spark):
 
 def test_metrics_recorded(pipeline_result, spark):
     _, _, res = pipeline_result
+    res.clusters.write.format("noop").mode("overwrite").save()
+    res.metrics.harvest()
     stages = {r.stage for r in res.metrics.records}
     assert {"prep", "signatures", "simhashes", "edges_exact", "edges_samesim",
             "edges_lsh", "edges_pigeonhole", "candidate_pairs",
@@ -159,16 +161,19 @@ def test_pipeline_f256_end_to_end(spark, sf_dir):
 def test_lazy_metrics_observe_rows(spark, sf_dir):
     """A3 (reference progress meta, discover.py:222-227): in lazy mode the
     stage row counts arrive as observe() side-cars of the final action —
-    no extra count() jobs — and harvest_observations() fills them in."""
+    no extra count() jobs — and harvest() fills them in."""
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
-    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    res = run_dedup_pipeline(spark, pages)
     assert all(r.rows_out == -1 for r in res.metrics.records)
     n_pages = res.clusters.count()            # the action
-    filled = res.metrics.harvest_observations()
+    filled = res.metrics.harvest()
     assert filled > 0
     by_stage = {r.stage: r.rows_out for r in res.metrics.records}
     assert by_stage["prep"] >= n_pages        # every page flowed through prep
     assert by_stage["clusters"] == n_pages
+    # a lazily checkpointed edge stage counts its rows too (its observation
+    # fires, with zero rows, when the checkpoint plans the frame)
+    assert by_stage["edges_lsh"] > 0
     mdf = res.metrics.to_df(spark)
     assert mdf.where("rows_out >= 0").count() >= filled
 
@@ -185,10 +190,8 @@ def test_pipeline_precomputed_text_only_table(spark, sf_dir):
     text_only = pages.select("url", "warc_ts", "text", "lang")
     for cfg in (WddConfig(), WddConfig(simhash_size=256)):
         sim = "simhash64" if cfg.simhash_size == 64 else "sim_parts"
-        res = run_dedup_pipeline(spark, text_only, cfg=cfg,
-                                 eager_stages=False)
-        res_html = run_dedup_pipeline(spark, pages, cfg=cfg,
-                                      eager_stages=False)
+        res = run_dedup_pipeline(spark, text_only, cfg=cfg)
+        res_html = run_dedup_pipeline(spark, pages, cfg=cfg)
         assert sim in res.signatures.columns
         sims = {r.page_id: r[sim] for r in res.simhashes.collect()}
         sims_html = {r.page_id: r[sim] for r in res_html.simhashes.collect()}
@@ -220,8 +223,7 @@ def test_extraction_failed_pages_never_weld(spark, sf_dir):
          bytearray(b"\xff\xfe\x00same"), "", "en"),
     ]
     failed = spark.createDataFrame(rows, schema=base.schema)
-    res = run_dedup_pipeline(spark, base.unionByName(failed),
-                             eager_stages=False)
+    res = run_dedup_pipeline(spark, base.unionByName(failed))
     # null sims recorded for every failed page (8 rows)
     assert res.simhashes.where(F.col("simhash64").isNull()).count() == 8
     cl = {r.url: r.cluster_id
@@ -253,8 +255,7 @@ def test_null_and_empty_content_are_exact_duplicates(spark, sf_dir):
         schema=base.schema)
     odd_urls = ["http://null.example/", "http://empty.example/"]
     res = run_dedup_pipeline(
-        spark, base.unionByName(odd).select("url", "warc_ts", "text", "lang"),
-        eager_stages=False)
+        spark, base.unionByName(odd).select("url", "warc_ts", "text", "lang"))
     assert res.simhashes.count() == 62 and res.clusters.count() == 62
     sims = res.simhashes.where(F.col("url").isin(odd_urls)).collect()
     assert len({r.digest for r in sims}) == 1
@@ -279,7 +280,7 @@ def test_embedding_only_duplicates_cluster(spark, sf_dir):
     construction; clustering it proves the edges_embedding stage."""
     pages, truth = synth_pages(spark, sf_dir, with_embeddings=True)
     assert "embedding" in pages.columns
-    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    res = run_dedup_pipeline(spark, pages)
     # the source appears in the candidate graph
     assert res.candidate_pairs.where(F.col("source") == "embedding").count() > 0
     # and every planted embedding-only pair co-clusters
@@ -295,8 +296,7 @@ def test_embedding_only_duplicates_cluster(spark, sf_dir):
     assert rows and all(r.c_a == r.c_b for r in rows)
     # without the embedding column the same corpus MISSES these pairs —
     # the planted kind is token-invisible, proving edge attribution
-    res0 = run_dedup_pipeline(spark, pages.drop("embedding"),
-                              eager_stages=False)
+    res0 = run_dedup_pipeline(spark, pages.drop("embedding"))
     assert res0.candidate_pairs.where(
         F.col("source") == "embedding").count() == 0
     cl0 = res0.clusters.select("url", "warc_ts", "cluster_id")
@@ -311,14 +311,14 @@ def test_embedding_only_duplicates_cluster(spark, sf_dir):
 
 
 def test_interleaved_pipelines_keep_their_caches(spark, sf_dir):
-    """VERDICT r4 #6: every pipeline run owns its own cache scope — an
-    eager run releasing its caches must NOT unpin a concurrently in-flight
-    (lazy) run's exploded tables."""
+    """VERDICT r4 #6: every pipeline run owns its own cache scope — a run
+    releasing its caches must NOT unpin a concurrently in-flight run's
+    exploded tables."""
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     small = pages.limit(120)
     # pipeline B constructs lazily: its candidate stages pin caches now,
     # its final action runs later
-    resB = run_dedup_pipeline(spark, small, eager_stages=False)
+    resB = run_dedup_pipeline(spark, small)
     frames_b = resB.scope.persisted
     def ckpts_b():
         # B's near-dup edge frames (a, b, source, score); CC, finished on
@@ -326,8 +326,10 @@ def test_interleaved_pipelines_keep_their_caches(spark, sf_dir):
         return [r for df, r in resB.scope._held.values()
                 if r is not None and "source" in df.columns]
     assert frames_b and ckpts_b()
-    # pipeline A runs eagerly to completion and releases ITS scope only
-    run_dedup_pipeline(spark, small, eager_stages=True)
+    # pipeline A runs to completion and releases ITS scope only
+    resA = run_dedup_pipeline(spark, small)
+    assert resA.clusters.count() > 0
+    assert resA.release() > 0
     assert all(df.storageLevel.useMemory for df in frames_b), \
         "A's release unpinned B's in-flight caches"
     # lsh, pigeonhole and substring: these pages carry no embeddings
@@ -340,9 +342,8 @@ def test_interleaved_pipelines_keep_their_caches(spark, sf_dir):
     assert resB.release() == 0  # idempotent
 
 
-@pytest.mark.parametrize("eager", [False, True])
 def test_release_returns_persistent_rdds_to_their_count_before_the_run(
-        spark, sf_dir, eager):
+        spark, sf_dir):
     """Every cache and checkpoint a run makes — stage frames, operator
     tables, CC's checkpoints — belongs to its scope, so release() leaves
     the session's persistent RDDs exactly as the run found them."""
@@ -353,7 +354,7 @@ def test_release_returns_persistent_rdds_to_their_count_before_the_run(
     # which would move the count mid-run.
     held = jsc.getPersistentRDDs()
     before = held.size()
-    res = run_dedup_pipeline(spark, pages.limit(150), eager_stages=eager)
+    res = run_dedup_pipeline(spark, pages.limit(150))
     res.clusters.write.format("noop").mode("overwrite").save()
     assert jsc.getPersistentRDDs().size() > before
     assert res.release() > 0
@@ -367,7 +368,7 @@ def test_frames_fail_fast_after_release(spark, sf_dir):
     jsc = spark.sparkContext._jsc
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     before = jsc.getPersistentRDDs().size()
-    res = run_dedup_pipeline(spark, pages.limit(120), eager_stages=False)
+    res = run_dedup_pipeline(spark, pages.limit(120))
     assert res.release() > 0
     assert jsc.getPersistentRDDs().size() == before
     for name in ("pages", "signatures", "simhashes", "candidate_pairs",
@@ -395,7 +396,7 @@ def test_flagship_computes_content_digest_exactly_once(spark, sf_dir):
     try:
         pages, _ = synth_pages(spark, sf_dir, with_truth=False,
                                with_embeddings=True)
-        res = run_dedup_pipeline(spark, pages.limit(200), eager_stages=False)
+        res = run_dedup_pipeline(spark, pages.limit(200))
         assert res.candidate_pairs.where(
             F.col("source") == "embedding").count() >= 0  # stage ran
     finally:
@@ -412,7 +413,7 @@ def test_embedding_stage_plan_has_no_nested_loop_join(spark, sf_dir):
     candidate-pair plan (the round-1 scale-killer class)."""
     pages, _ = synth_pages(spark, sf_dir, with_truth=False,
                            with_embeddings=True)
-    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    res = run_dedup_pipeline(spark, pages)
     plan = res.candidate_pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -424,7 +425,7 @@ def test_embedding_column_all_null_skips_stage(spark, sf_dir):
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     with_null = pages.limit(60).withColumn(
         "embedding", F.lit(None).cast("array<float>"))
-    res = run_dedup_pipeline(spark, with_null, eager_stages=False)
+    res = run_dedup_pipeline(spark, with_null)
     assert res.candidate_pairs.where(
         F.col("source") == "embedding").count() == 0
     assert res.clusters.count() == 60
@@ -442,7 +443,7 @@ def test_signature_stage_partitions_sized_by_content_bytes(
     total = pages.agg(F.sum(F.octet_length("html"))).first()[0]
     target = total // 10
     monkeypatch.setattr(pipeline, "UDF_PARTITION_BYTES", target)
-    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    res = run_dedup_pipeline(spark, pages)
     n = math.ceil(total / target)
     assert n > spark.sparkContext.defaultParallelism
     assert res.signatures.rdd.getNumPartitions() == n
@@ -466,7 +467,7 @@ def test_clusters_equal_cc_over_non_exact_candidate_pairs(spark, sf_dir):
 
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     for cfg in (WddConfig(), WddConfig(simhash_size=256)):
-        res = run_dedup_pipeline(spark, pages, cfg=cfg, eager_stages=False)
+        res = run_dedup_pipeline(spark, pages, cfg=cfg)
         reps = res.pages.groupBy("digest").agg(F.min("page_id").alias("rep"))
         cc = connected_components(
             res.candidate_pairs.where(F.col("source") != "exact")

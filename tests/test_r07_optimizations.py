@@ -189,7 +189,7 @@ def test_lazy_pipeline_releases_checkpointed_edge_frames(spark, sf_dir):
     from wdd.pipeline import run_dedup_pipeline
     from wdd.sources.pages import synth_pages
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
-    res = run_dedup_pipeline(spark, pages.limit(150), eager_stages=False)
+    res = run_dedup_pipeline(spark, pages.limit(150))
     # edge frames are (a, b, source, score); CC, finished on the driver,
     # keeps no checkpoint of its own. lsh, pigeonhole and substring: these
     # pages carry no embeddings

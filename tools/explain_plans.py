@@ -122,7 +122,7 @@ def main():
     from wdd.sources.pages import synth_pages
     from wdd.pipeline import run_dedup_pipeline
     pages, _ = synth_pages(spark, SF, with_truth=False, with_embeddings=True)
-    res = run_dedup_pipeline(spark, pages, eager_stages=False)
+    res = run_dedup_pipeline(spark, pages)
     sections["pipeline_candidates_with_embedding"] = (
         "Flagship candidate-pair union incl. the edges_embedding source — "
         "every join an equi-join; the sign-LSH bucket join carries only "

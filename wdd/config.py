@@ -29,12 +29,12 @@ class WddConfig:
     lsh_rows: int = 4               # bands * rows == minhash_perms
     shingle_words: int = 3          # word w-shingles over extracted text
     minhash_seed: int = 42
-    # Target similarity is 0.8 true Jaccard; the 128-perm estimator has
-    # sigma ~= sqrt(J(1-J)/128) ~= 0.035, so verifying at target-3*sigma keeps
-    # recall of true-J>=0.8 pairs >= 0.999 (precision is restored by the
-    # connected-components + downstream consumers seeing the score).
-    jaccard_target: float = 0.8
-    jaccard_threshold: float = 0.7  # applied to the signature ESTIMATE
+    # Applied to the signature ESTIMATE. The target is 0.8 true Jaccard;
+    # the 128-perm estimator has sigma ~= sqrt(J(1-J)/128) ~= 0.035, so
+    # verifying at target-3*sigma keeps recall of true-J>=0.8 pairs >= 0.999
+    # (precision is restored by the connected-components + downstream
+    # consumers seeing the score).
+    jaccard_threshold: float = 0.7
 
     # --- embedding-cosine near-dup edges (optional pipeline source) ---
     # Activated when the pages table carries an `embedding` array<float>

@@ -48,6 +48,15 @@ from wdd.scope import RunScope, scope_for
 # columns, ~16 MB collected once
 DRIVER_EDGES = 1 << 20
 
+# large+small contraction rounds chained into ONE materialization +
+# convergence check (matters only above DRIVER_EDGES): each sync point is a
+# driver round trip whose fixed latency (~1-1.5 s on local mode) dominates
+# small-graph rounds — measured 7 rounds = ~10 s FLAT from 2 to 8 cores,
+# i.e. pure serial fraction. Chaining halves the sync points at the cost
+# of at most ROUNDS_PER_SYNC-1 extra (cheap, already-converged)
+# contractions; the fixpoint is identical.
+ROUNDS_PER_SYNC = 2
+
 
 @dataclass
 class CCResult:
@@ -112,7 +121,6 @@ def _arrow_labels(spark, t: pa.Table) -> DataFrame:
 
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
                          max_iter: int = 25,
-                         rounds_per_sync: int = 2,
                          cache_token: str | None = None) -> CCResult:
     """edges: (a, b) long ids; vertices: optional (id) frame for isolated
     nodes. Returns every vertex labeled with cluster_id = its component min.
@@ -123,20 +131,11 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     DRIVER_EDGES + 1 deduplicated edges decides (a small graph costs that
     one collect); after every sync the signature's count does.
 
-    rounds_per_sync (which matters only above DRIVER_EDGES) chains that
-    many large+small contraction rounds into ONE materialization +
-    convergence check: each sync point is a driver round trip whose fixed
-    latency (~1-1.5 s on local mode) dominates small-graph rounds — measured
-    7 rounds = ~10 s FLAT from 2 to 8 cores, i.e. pure serial fraction.
-    Chaining halves the sync points at the cost of at most
-    rounds_per_sync-1 extra (cheap, already-converged) contractions; the
-    fixpoint is identical.
-
     CCResult.iterations counts EXECUTED contraction rounds (sync points x
-    rounds_per_sync) — 0 when the graph finished on the driver at entry,
+    ROUNDS_PER_SYNC) — 0 when the graph finished on the driver at entry,
     and an upper bound on the rounds the graph needed otherwise, since the
     fixpoint may be reached partway through a chained sync. max_iter
-    bounds sync points, so at most rounds_per_sync * max_iter contractions
+    bounds sync points, so at most ROUNDS_PER_SYNC * max_iter contractions
     run."""
     # tokenless: a private scope, so the result's checkpoints stay
     # unreferenced and Spark's ContextCleaner frees them once it is dropped
@@ -179,13 +178,13 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
         # serial time; measured ~0.2s/round on an idle scheduler)
         chain = []
         e2 = e
-        for _ in range(rounds_per_sync):
+        for _ in range(ROUNDS_PER_SYNC):
             # localCheckpoint after EVERY star contraction, not once per
             # sync: each star references its input 3-4x, so an unbroken
             # k-contraction lineage grows the Catalyst tree ~4^k and
             # toRdd planning inside the sync-end localCheckpoint cost a
             # measured 1.3-3 s of SERIAL driver time per sync (the flat
-            # 2-to-8-core component the rounds_per_sync docstring notes).
+            # 2-to-8-core component ROUNDS_PER_SYNC's comment notes).
             # Truncating at every contraction keeps every planned tree
             # one-star deep: sync build 1.7 s -> 0.8 s, action 0.12 ->
             # 0.07 s on a 20k-edge graph. Shuffle volume is unchanged;
@@ -200,7 +199,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
         sig = _signature(e2)       # materializes e2's checkpoint, which
         scope.drop(e, *chain[:-1])  # cuts the lineage: the rest are dead
         e = e2
-        iterations = sync * rounds_per_sync
+        iterations = sync * ROUNDS_PER_SYNC
         if sig == prev_sig:
             converged = True
             break

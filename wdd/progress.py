@@ -11,14 +11,15 @@ Reference semantics being reproduced:
     'job_id', 'info'}.
 
 Spark-first design: no per-item accumulator churn and no custom listener —
-Spark's PUBLIC status tracker already counts completed tasks per stage,
-live, for free. A TrackedJob runs its action on an InheritableThread under
-a dedicated job group (thread-local in pinned-thread mode, so concurrent
-jobs don't cross-tag); status() folds the group's per-stage
-(numCompletedTasks / numTasks) into the reference's progress string,
+Spark's status store already counts completed tasks per stage, live, for
+free (read through wdd.metrics.job_costs, the engine's one status reader).
+A TrackedJob runs its action on an InheritableThread under a dedicated job
+group (thread-local in pinned-thread mode, so concurrent jobs don't
+cross-tag); status() folds the group's per-stage
+(numCompleteTasks / numTasks) into the reference's progress string,
 scaling task progress to the caller's item total. Task granularity is the
 Spark analogue of the reference's 10-capture update stride: one Spark task
-processes one partition of captures, and the tracker ticks as each lands.
+processes one partition of captures, and the count ticks as each lands.
 
 Cancellation maps to sc.cancelJobGroup — the Spark equivalent of Celery
 task revocation (the reference exposes none, but the group tag makes it
@@ -34,6 +35,8 @@ from typing import Any, Callable
 
 from pyspark import InheritableThread
 from pyspark.sql import SparkSession
+
+from wdd.metrics import job_costs
 
 
 class TrackedJob:
@@ -95,20 +98,11 @@ class TrackedJob:
     # -- the poll surface (web.py:138-165 shapes) ----------------------
     def _task_progress(self) -> tuple[int, int]:
         """(completed, total) tasks across the group's jobs, from the
-        public status tracker — no listeners, no extra Spark jobs."""
-        tracker = self.spark.sparkContext.statusTracker()
-        done = total = 0
-        for jid in tracker.getJobIdsForGroup(self._group):
-            info = tracker.getJobInfo(jid)
-            if info is None:
-                continue
-            for sid in info.stageIds:
-                st = tracker.getStageInfo(sid)
-                if st is None:
-                    continue
-                done += st.numCompletedTasks
-                total += st.numTasks
-        return done, total
+        status store — no listeners, no extra Spark jobs."""
+        sc = self.spark.sparkContext
+        ids = sc.statusTracker().getJobIdsForGroup(self._group)
+        cost = job_costs(sc, {self._group: ids})[self._group]
+        return cost.done, cost.tasks
 
     def status(self) -> dict:
         if not self._done.is_set():

@@ -8,12 +8,19 @@ release each other's caches; operators called with no token share the
 None scope. DataFrame.unpersist() does not reach a localCheckpoint's
 blocks, so the scope keeps the checkpointed RDD (the frame's LogicalRDD
 leaf) itself.
+
+A run's scope also owns its job tags: `stage(name)` tags every Spark job
+the current thread submits inside the block with `wdd:<token>:<name>`,
+which is how the run's stage records read their Spark cost back
+(wdd.metrics).
 """
 
 from __future__ import annotations
 
 import threading
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _SCOPES: dict[str | None, RunScope] = {}
@@ -21,9 +28,10 @@ _LOCK = threading.Lock()
 
 
 class RunScope:
-    def __init__(self, token: str | None, eager: bool = False):
-        self.token, self.eager = token, eager
+    def __init__(self, token: str | None):
+        self.token = token
         self.released = False
+        self.tags: dict[str, str] = {}     # stage -> its job tag
         # id(frame) -> (frame, checkpointed JVM RDD or None if persisted)
         self._held: dict[int, tuple[DataFrame, object]] = {}
 
@@ -39,14 +47,22 @@ class RunScope:
             self._held[id(df)] = (df, rdd)
         return df
 
-    def materialize(self, df: DataFrame, keep=None) -> DataFrame:
-        """One pipeline stage's frame. An eager scope checkpoints it now; a
-        lazy one applies `keep` (self.persist for frames several stages
-        read, self.checkpoint for deep-planned frames with few rows) or
-        leaves it to the eventual action."""
-        if self.eager:
-            return self.checkpoint(df, eager=True)
-        return keep(df) if keep is not None else df
+    @contextmanager
+    def stage(self, name: str):
+        """Tag every Spark job this thread submits inside the block — AQE
+        stage and broadcast jobs included, as they capture the submitting
+        thread's local properties — with the run's tag for stage `name`.
+        The tag is removed on exit: pinned-thread mode reuses JVM threads,
+        so a tag left behind would leak into later, unrelated jobs."""
+        tag = f"wdd:{self.token}:{name}"  # job tags may not hold commas
+        with _LOCK:
+            self.tags[name] = tag
+        sc = SparkContext._active_spark_context
+        sc.addJobTag(tag)
+        try:
+            yield
+        finally:
+            sc.removeJobTag(tag)
 
     @property
     def persisted(self) -> list[DataFrame]:
