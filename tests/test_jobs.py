@@ -180,3 +180,78 @@ def test_long_ledger_reads_without_a_spark_job(spark, tmp_path, requested):
     assert ledger.count() == 41
     again = led.submit(requested)
     assert [r.seq for r in again.collect()] == [42] * 10
+
+
+def _ledger_files(led):
+    return sorted(p.name for p in led._data_dir().iterdir())
+
+
+def test_noop_submit_leaves_no_ledger_file(spark, tmp_path, requested):
+    """Spark writes one empty part file for an empty frame: a submit with
+    nothing fresh returns an empty frame and leaves jobs/ as it was, and the
+    next append still reads back under its own (later) seq."""
+    led = JobLedger(tmp_path / "jobs", spark)
+    led.submit(requested)
+    files = _ledger_files(led)
+    again = led.submit(requested)
+    assert again.count() == 0
+    assert again.columns == list(led.read().columns)
+    assert _ledger_files(led) == files
+    fresh = led.submit(spark.createDataFrame(
+        [("http://new.example/", "2024")], "url string, year string"))
+    assert [(r.url, r.seq) for r in fresh.collect()] == [
+        ("http://new.example/", 3)]
+    assert led.status("http://site0.example/", "2024") == "running"
+
+
+def test_store_stages_skip_a_stage_without_manifest(spark, tmp_path,
+                                                    requested):
+    """A stage directory whose manifest is missing (a write that crashed
+    before its manifest) is not a finished stage: stages() leaves it out
+    and reconcile marks none of its jobs, nor appends anything."""
+    led = JobLedger(tmp_path / "jobs", spark)
+    store = StageStore(tmp_path / "store", spark)
+    low = requested.where(F.col("url") < "http://site5")
+    led.submit(low, stage="done_stage")
+    led.submit(requested.subtract(low), stage="crashed")
+    store.materialize("done_stage", low)
+    requested.write.parquet(str(tmp_path / "store" / "crashed" / "data"))
+    assert store.stages() == ["done_stage"]
+    assert led.reconcile(store) == 5
+    files = _ledger_files(led)
+    assert led.reconcile(store) == 0            # nothing left to transition
+    assert _ledger_files(led) == files
+    assert led.status("http://site1.example/", "2024") == "done"
+    assert led.status("http://site7.example/", "2024") == "running"
+
+
+def test_reconcile_collects_nothing(spark, tmp_path, requested):
+    """reconcile lists the finished stages and counts its transitions from
+    parquet footers: none of the Spark jobs it submits is a collect, and a
+    store with no finished stage costs no job at all."""
+    led = JobLedger(tmp_path / "jobs", spark)
+    store = StageStore(tmp_path / "store", spark)
+    led.submit(requested, stage="sig_batch_1")
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs_newest_first():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return (jobs.apply(i) for i in range(jobs.size()))
+
+    def job_names(fn):
+        """fn's result and the call-site names of the jobs it submitted"""
+        last = next((j.jobId() for j in jobs_newest_first()), -1)
+        out = fn()
+        names = []
+        for j in jobs_newest_first():
+            if j.jobId() <= last:
+                break
+            names.append(j.name())
+        return out, sorted(names)
+
+    assert job_names(lambda: led.reconcile(store)) == (0, [])
+    store.materialize("sig_batch_1", requested)
+    n, names = job_names(lambda: led.reconcile(store))
+    assert n == 10 and names
+    assert not [nm for nm in names if nm.startswith("collect")], names

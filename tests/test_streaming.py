@@ -169,3 +169,93 @@ def test_signature_batch_has_no_anchors_or_text(spark, sf_dir, tmp_path):
             ("signature", "array<int>")]
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "anchors" not in plan
+
+
+def _keyed_pages(spark, tmp_path, n, host):
+    from datetime import datetime
+    ts = datetime(2024, 3, 1)
+    pages = spark.createDataFrame(
+        [(f"http://{host}{i}.example/", ts,
+          bytearray(b"<html><body><p>w" + str(i).encode()
+                    + b"</p></body></html>"),
+          f"w{i}", "en") for i in range(n)],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    pages_dir = str(tmp_path / "pages")
+    pages.write.parquet(pages_dir)
+    return pages_dir
+
+
+def test_redrain_of_ingested_files_adds_no_ledger_file(spark, tmp_path):
+    """A drain over files whose keys the ledger already holds (a fresh
+    stream checkpoint) submits nothing fresh and reconciles nothing: the
+    ledger's jobs/ directory keeps its file count, and the keys stay done."""
+    from wdd.checkpoint import StageStore
+    from wdd.jobs import JobLedger
+
+    pages_dir = _keyed_pages(spark, tmp_path, 4, "r")
+    ledger = JobLedger(tmp_path / "jobs", spark)
+    store = StageStore(tmp_path / "store", spark)
+    run_incremental_simhash(spark, pages_dir, str(tmp_path / "out"),
+                            str(tmp_path / "ckpt1"),
+                            ledger=ledger, store=store, stage="ingest_1")
+    files = sorted(p.name for p in ledger._data_dir().iterdir())
+    run_incremental_simhash(spark, pages_dir, str(tmp_path / "out"),
+                            str(tmp_path / "ckpt2"),
+                            ledger=ledger, store=store, stage="ingest_1")
+    assert sorted(p.name for p in ledger._data_dir().iterdir()) == files
+    assert {ledger.status(f"http://r{i}.example/", 2024)
+            for i in range(4)} == {"done"}
+
+
+def test_failed_submit_fails_the_batch_and_the_replay_converges(spark,
+                                                                 tmp_path):
+    """The ledger submit runs beside the signature write; when it fails the
+    batch fails with it, uncommitted, and the next drain replays it: the
+    manifest then holds each (page_id, digest) once, every key reads done,
+    and no submit thread outlives a drain."""
+    import os
+    import threading
+
+    import pytest
+    from pyspark import InheritableThread
+
+    from wdd.checkpoint import StageStore
+    from wdd.jobs import JobLedger
+
+    def submit_threads():
+        return {t for t in threading.enumerate()
+                if isinstance(t, InheritableThread)}
+
+    pages_dir = _keyed_pages(spark, tmp_path, 6, "f")
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    ledger = JobLedger(tmp_path / "jobs", spark)
+    store = StageStore(tmp_path / "store", spark)
+    submit, calls = ledger.submit, []
+
+    def failing_once(*a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected submit failure")
+        return submit(*a, **kw)
+
+    ledger.submit = failing_once
+    alive = submit_threads()
+    with pytest.raises(Exception, match="injected submit failure"):
+        run_incremental_simhash(spark, pages_dir, out_dir, ckpt,
+                                ledger=ledger, store=store, stage="ingest_1")
+    assert submit_threads() <= alive
+    commits = os.path.join(ckpt, "commits")
+    assert not os.path.isdir(commits) or not [
+        p for p in os.listdir(commits) if not p.startswith(".")]
+    assert not store.exists("ingest_1")
+    assert ledger.status("http://f0.example/", 2024) is None
+
+    run_incremental_simhash(spark, pages_dir, out_dir, ckpt,
+                            ledger=ledger, store=store, stage="ingest_1")
+    assert len(calls) == 2
+    assert submit_threads() <= alive
+    ids = [tuple(r) for r in
+           store.load("ingest_1").select("page_id", "digest").collect()]
+    assert len(ids) == len(set(ids)) == 6
+    assert {ledger.status(f"http://f{i}.example/", 2024)
+            for i in range(6)} == {"done"}

@@ -30,6 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from wdd.config import DEFAULT, WddConfig
 
 
+def footer_rows(files) -> int:
+    """Rows in these parquet files, summed from their footers (no Spark
+    job)."""
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
 class StageStore:
     def __init__(self, root: str, spark: SparkSession,
                  cfg: WddConfig = DEFAULT):
@@ -46,6 +52,13 @@ class StageStore:
 
     def exists(self, stage: str) -> bool:
         return self._manifest(stage).exists()
+
+    def stages(self) -> list[str]:
+        """The stages whose manifest exists, from one listing of the store
+        root: a stage directory a crashed write left without its manifest
+        is not one of them."""
+        return sorted(e.name for e in os.scandir(self.root)
+                      if e.is_dir() and self.exists(e.name))
 
     def load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(str(self._dir(stage) / "data"))
@@ -84,7 +97,7 @@ class StageStore:
         files = list(path.rglob("*.parquet"))
         manifest = {
             "stage": stage,
-            "rows": sum(pq.read_metadata(f).num_rows for f in files),
+            "rows": footer_rows(files),
             "partitions": out.rdd.getNumPartitions(),
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "written_files": len(files),

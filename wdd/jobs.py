@@ -23,10 +23,13 @@ ledger holds. `seq` is allocated without Spark and without a lock: a writer
 claims `seq/<n>` with an exclusive create (O_CREAT|O_EXCL), so two writers —
 threads or processes on one root — never share a seq, and one append's rows
 are exactly the files named `<seq>-*`. Latest seq wins per job_id (a per-job
-window, the same shape as the collapse operator). StageStore linkage:
-reconcile() marks running jobs done once their stage manifest exists, so a
-crashed run resumes with the store and the ledger converges without a
-coordinator.
+window, the same shape as the collapse operator). An append whose footers
+hold no rows leaves no file behind: its seq claim stays, and latest-seq-wins
+needs no contiguous seqs. StageStore linkage: reconcile() marks running
+jobs done once their stage manifest exists — the finished stages come from
+one listing of the store, and the count of jobs it transitioned from the
+footers of its one append, so it collects nothing — and a crashed run
+resumes with the store and the ledger converges without a coordinator.
 
 A ledger written before seq claims existed (`part-*` files in `jobs/`, no
 `seq/`) still reads; its first claim starts above its max seq.
@@ -43,7 +46,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from wdd.checkpoint import StageStore
+from wdd.checkpoint import StageStore, footer_rows
 
 LEDGER_SCHEMA = ("job_id string, url string, year string, status string, "
                  "stage string, seq long")
@@ -152,22 +155,26 @@ class JobLedger:
             except FileExistsError:
                 seq += 1
 
-    def _append(self, rows: DataFrame) -> DataFrame:
+    def _append(self, rows: DataFrame) -> tuple[int, int]:
         """Write `rows` as one ledger append under a fresh seq: Spark writes
         them to a hidden `jobs/_append-<seq>` directory, whose part files
-        are then renamed into `jobs/` as `<seq>-<part file>`. Returns a read
-        of exactly this append."""
+        are then renamed into `jobs/` as `<seq>-<part file>`. An append of
+        no rows (Spark still writes one empty part file) is dropped whole.
+        Returns the seq and the rows appended, from the part files'
+        footers."""
         seq = self._next_seq()
         d = self._data_dir()
         staging = d / f"_append-{seq}"
         (rows.withColumn("seq", F.lit(seq).cast("long"))
          .select(*LEDGER_COLUMNS)
          .write.parquet(str(staging)))
-        for f in staging.glob("part-*"):
-            os.replace(f, d / f"{seq}-{f.name}")
+        parts = list(staging.glob("part-*"))
+        n = footer_rows(parts)
+        if n:
+            for f in parts:
+                os.replace(f, d / f"{seq}-{f.name}")
         shutil.rmtree(staging)
-        return (self._pinned().option("pathGlobFilter", f"{seq}-*")
-                .parquet(str(d)))
+        return seq, n
 
     def submit(self, requested: DataFrame,
                stage: str | None = None) -> DataFrame:
@@ -176,34 +183,37 @@ class JobLedger:
         them (empty result == everything was already submitted — the
         reference's get_active_task no-op path). `stage` optionally names
         the StageStore stage whose manifest marks these jobs done."""
-        return self._append(
+        seq, n = self._append(
             pending_work(requested, self.read())
             .withColumn("job_id", job_id_col())
             .withColumn("status", F.lit("running"))
             .withColumn("stage", F.lit(stage).cast("string")))
+        if not n:
+            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        return (self._pinned().option("pathGlobFilter", f"{seq}-*")
+                .parquet(str(self._data_dir())))
 
-    def mark(self, jobs: DataFrame, status: str) -> None:
+    def mark(self, jobs: DataFrame, status: str) -> int:
         """Append a status transition for every job in `jobs` (needs job_id,
-        url, year, stage columns — e.g. the frame submit() returned)."""
-        self._append(jobs.select("job_id", "url", "year", "stage")
-                     .dropDuplicates(["job_id"])
-                     .withColumn("status", F.lit(status)))
+        url, year, stage columns — e.g. the frame submit() returned).
+        Returns the number of jobs transitioned."""
+        return self._append(jobs.select("job_id", "url", "year", "stage")
+                            .dropDuplicates(["job_id"])
+                            .withColumn("status", F.lit(status)))[1]
 
     def reconcile(self, store: StageStore) -> int:
         """Mark running jobs done when their stage manifest exists in the
         store (resume path: a crashed run that DID materialize its stage is
-        recognized as complete). Stage names are few — one per-stage count
-        collect is metadata-sized and gives both the stages and how many
-        jobs each transitions. Returns #jobs transitioned."""
-        running = latest_status(self.read()).where(
-            (F.col("status") == "running") & F.col("stage").isNotNull())
-        counts = {r.stage: r["count"] for r in
-                  running.groupBy("stage").count().collect()}
-        finished = [s for s in counts if store.exists(s)]
+        recognized as complete). The finished stages come from one listing
+        of the store, and the number transitioned from the footers of the
+        one append that marks them, so nothing is collected. Returns #jobs
+        transitioned."""
+        finished = store.stages()
         if not finished:
             return 0
-        self.mark(running.where(F.col("stage").isin(finished)), "done")
-        return sum(counts[s] for s in finished)
+        return self.mark(latest_status(self.read()).where(
+            (F.col("status") == "running") & F.col("stage").isin(finished)),
+            "done")
 
     def status(self, url: str, year) -> str | None:
         """Point status read (the reference's /job poll, web.py:135-164) —

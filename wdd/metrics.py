@@ -20,7 +20,6 @@ import json
 from dataclasses import dataclass, field
 from typing import Iterable
 
-from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 
@@ -34,45 +33,77 @@ class JobCost:
     shuffle_write_bytes: int = 0
 
 
-def job_costs(sc: SparkContext,
-              job_ids: dict[str, Iterable[int]]) -> dict[str, JobCost]:
-    """Per key, the Spark cost of its jobs, read from the status store. Only
-    these jobs and their stages are read, so the cost of a read does not
-    grow with session history. A stage listed by several jobs counts once,
-    under the lowest job id: a later job that reuses its shuffle lists it
-    as skipped. Jobs the store no longer holds are left out."""
-    jvm, store = sc._jvm, sc._jsc.sc().statusStore()
+def _view(sc: SparkContext, wrapper: str):
+    """A KVStore view over the status store's `wrapper` records (e.g.
+    JobDataWrapper, keyed by job id)."""
+    return sc._jsc.sc().statusStore().store().view(
+        sc._jvm.java.lang.Class.forName(f"org.apache.spark.status.{wrapper}"))
+
+
+def _infos(sc: SparkContext, view) -> list[dict]:
+    """The `info` record of every element of `view`, from one Jackson dump:
+    a read costs a fixed number of py4j calls however many records it
+    returns."""
+    jvm = sc._jvm
     mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
     mapper.registerModule(
         jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+    return [r["info"] for r in json.loads(mapper.writeValueAsString(view))]
 
-    def read(get, key) -> dict | None:
-        try:
-            return json.loads(mapper.writeValueAsString(get(key)))
-        except Py4JJavaError:        # NoSuchElementException: not (yet) held
-            return None
 
-    out = {k: JobCost() for k in job_ids}
+def _next_job_id(sc: SparkContext) -> int:
+    """One above the newest job the status store holds (0 if none): every
+    job submitted from now on gets an id at least this."""
+    newest = _infos(sc, _view(sc, "JobDataWrapper").reverse().max(1))
+    return newest[0]["jobId"] + 1 if newest else 0
+
+
+def _costs(sc: SparkContext,
+           jobs: dict[str, list[dict]]) -> dict[str, JobCost]:
+    """Per key, the Spark cost of these job records and their stages, whose
+    records are read in one range of stage ids. A stage listed by several
+    jobs counts once, under the lowest job id: a later job that reuses its
+    shuffle lists it as skipped."""
+    ids = {sid for js in jobs.values() for j in js for sid in j["stageIds"]}
+    stages: dict[int, dict] = {}
+    if ids:
+        view = (_view(sc, "StageDataWrapper").index("stageId")
+                .first(min(ids)).last(max(ids)))
+        for st in sorted(_infos(sc, view), key=lambda st: st["attemptId"]):
+            stages[st["stageId"]] = st              # the last attempt wins
+    out = {k: JobCost() for k in jobs}
     seen: set[int] = set()
-    for jid, key in sorted((int(j), k) for k, ids in job_ids.items()
-                           for j in ids):
-        job = read(store.job, jid)
-        if job is None:
-            continue
+    for _, key, job in sorted(((j["jobId"], k, j)
+                               for k, js in jobs.items() for j in js),
+                              key=lambda t: t[:2]):
         cost = out[key]
         cost.jobs += 1
         for sid in job["stageIds"]:
-            if sid in seen:
+            if sid in seen or sid not in stages:
                 continue
             seen.add(sid)
-            st = read(store.lastStageAttempt, sid)
-            if st is None:
-                continue
+            st = stages[sid]
             cost.tasks += st["numTasks"]
             cost.done += st["numCompleteTasks"]
             cost.task_s += st["executorRunTime"] / 1000.0
             cost.shuffle_write_bytes += st["shuffleWriteBytes"]
     return out
+
+
+def job_costs(sc: SparkContext,
+              job_ids: dict[str, Iterable[int]]) -> dict[str, JobCost]:
+    """Per key, the Spark cost of its jobs, read from the status store. Only
+    the range of these jobs' ids and the range of their stages' ids are
+    read, so the cost of a read does not grow with session history. Jobs
+    the store no longer holds are left out."""
+    job_ids = {k: [int(j) for j in ids] for k, ids in job_ids.items()}
+    flat = [j for ids in job_ids.values() for j in ids]
+    held = {}
+    if flat:
+        held = {j["jobId"]: j for j in _infos(
+            sc, _view(sc, "JobDataWrapper").first(min(flat)).last(max(flat)))}
+    return _costs(sc, {k: [held[j] for j in ids if j in held]
+                       for k, ids in job_ids.items()})
 
 
 @dataclass
@@ -100,6 +131,9 @@ class MetricsCollector:
     order varies run to run."""
     tags: dict[str, str]                               # stage -> job tag
     records: list[StageRecord] = field(default_factory=list)
+    # no job of the run has a lower id: harvest reads the jobs from here on
+    first_job: int = field(default_factory=lambda: _next_job_id(
+        SparkContext._active_spark_context))
     # stage -> Observation, or the frame's own QueryExecution for a frame
     # kept with a lazy localCheckpoint
     observations: dict = field(default_factory=dict)
@@ -137,16 +171,17 @@ class MetricsCollector:
         return out
 
     def harvest(self) -> int:
-        """Fill every stage's Spark cost from one read of the status store
-        (after the listener bus has caught up), and rows_out for observed
-        stages whose plan some action has since run; a stage whose observed
-        node never ran stays at -1. Returns the number of rows_out
-        filled."""
+        """Fill every stage's Spark cost from the status store (after the
+        listener bus has caught up) — one read of the jobs submitted since
+        the run began, split by their tags, and one of their stages — and
+        rows_out for observed stages whose plan some action has since run;
+        a stage whose observed node never ran stays at -1. Returns the
+        number of rows_out filled."""
         sc = SparkContext._active_spark_context
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc._jsc.sc().statusTracker()
-        costs = job_costs(sc, {stage: tracker.getJobIdsForTag(tag)
-                               for stage, tag in self.tags.items()})
+        jobs = _infos(sc, _view(sc, "JobDataWrapper").first(self.first_job))
+        costs = _costs(sc, {stage: [j for j in jobs if tag in j["jobTags"]]
+                            for stage, tag in self.tags.items()})
         by_stage = {r.stage: r for r in self.records}
         for stage, c in costs.items():
             r = by_stage.get(stage) or self.record(stage)
@@ -158,13 +193,17 @@ class MetricsCollector:
             if obs is None or r.rows_out >= 0:
                 continue
             try:
-                if not isinstance(obs, Observation):    # a checkpoint's plan
-                    r.rows_out = obs.observedMetrics().get(
-                        self.tags[r.stage]).get().getLong(0)
-                elif obs._jo.getOrEmpty().isEmpty():
-                    continue             # not materialized yet
-                else:
+                if isinstance(obs, Observation):
+                    # not getOrEmpty: it waits 100 ms on an observation no
+                    # action has filled yet
+                    if not obs._jo.future().isCompleted():
+                        continue
                     r.rows_out = int(obs.get["rows_out"])
+                else:                                # a checkpoint's plan
+                    row = obs.observedMetrics().get(self.tags[r.stage])
+                    if row.isEmpty():
+                        continue
+                    r.rows_out = row.get().getLong(0)
                 n += 1
             except Exception:
                 continue                 # pre-action NPE -> not ready

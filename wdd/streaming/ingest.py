@@ -13,6 +13,7 @@ late-data semantics — Redis TTL is operational, SURVEY.md §2.8).
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,7 +48,10 @@ def run_incremental_simhash(spark: SparkSession, pages_dir: str,
 
     Ledger wiring (crash-resume end-to-end): when `ledger`/`store`/`stage`
     are given, each micro-batch submits its (url, year) work to the
-    JobLedger as 'running' before writing, and after the drain the stage
+    JobLedger as 'running' on a second thread while the batch's own thread
+    writes its signatures; both finish before the batch returns, and so
+    before the stream commits it — a failed submit or write fails the
+    batch, and the next drain replays it. After the drain the stage
     manifest is materialized into the StageStore and `ledger.reconcile`
     transitions running->done. A run that crashed between submit and
     manifest leaves 'running' rows; the NEXT run's stream checkpoint skips
@@ -65,14 +69,36 @@ def run_incremental_simhash(spark: SparkSession, pages_dir: str,
                         "text string, lang string")
     stream = (spark.readStream.schema(schema).parquet(pages_dir))
 
+    sink_schema = None
+
     def _sink(batch: DataFrame, batch_id: int):
-        if ledger is not None:
-            ledger.submit(
-                batch.select("url",
-                             F.year("warc_ts").cast("string").alias("year")),
-                stage=stage)
+        nonlocal sink_schema
         out = _signature_batch(batch, cfg)
-        out.write.mode("append").parquet(out_dir)
+        sink_schema = out.schema
+        if ledger is None:
+            out.write.mode("append").parquet(out_dir)
+            return
+        failed: list[BaseException] = []
+
+        def submit():
+            try:
+                ledger.submit(
+                    batch.select(
+                        "url", F.year("warc_ts").cast("string").alias("year")),
+                    stage=stage)
+            except BaseException as exc:        # re-raised on the batch thread
+                failed.append(exc)
+
+        # an InheritableThread carries the batch thread's local properties
+        # (job group, tags) and releases its JVM thread when it ends
+        submitter = InheritableThread(target=submit)
+        submitter.start()
+        try:
+            out.write.mode("append").parquet(out_dir)
+        finally:
+            submitter.join()
+        if failed:
+            raise failed[0]
 
     (stream.writeStream
      .foreachBatch(_sink)
@@ -89,9 +115,14 @@ def run_incremental_simhash(spark: SparkSession, pages_dir: str,
             # (page_id, digest) identity when freezing the stage manifest so
             # duplicates never enter the store (the sink directory itself
             # keeps the at-least-once contract; readers needing exactly-once
-            # go through the manifest).
+            # go through the manifest). The read takes the schema the batches
+            # wrote, so it runs no schema-inference job; only a drain that
+            # wrote no batch (its files were committed before a crash)
+            # infers it.
+            reader = spark.read
+            if sink_schema is not None:
+                reader = reader.schema(sink_schema)
             store.materialize(
                 stage,
-                spark.read.parquet(out_dir)
-                .dropDuplicates(["page_id", "digest"]))
+                reader.parquet(out_dir).dropDuplicates(["page_id", "digest"]))
         ledger.reconcile(store)
