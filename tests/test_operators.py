@@ -5,8 +5,8 @@ from pyspark.sql import functions as F
 
 from wdd.config import WddConfig
 from wdd.operators.components import connected_components
-from wdd.operators.pairs import (canonicalize_pairs, dedup_pairs,
-                                 pairs_from_groups, release_stage_caches)
+from wdd.operators.pairs import (blocked_pairs, pairs_from_groups,
+                                 release_stage_caches)
 from wdd.operators.pigeonhole import pigeonhole_candidates
 from wdd.operators.dedup import exact_dup_edges
 
@@ -31,12 +31,18 @@ def test_pairs_from_groups_star_chain_over_cap(spark):
     assert len(got) < 7 * 6 / 2
 
 
-def test_canonicalize_and_dedup_pairs(spark):
+def test_blocked_pairs_dedups_per_source(spark):
+    """A pair several keys of one scheme find is kept once; a pair two
+    schemes find is kept once per scheme; an equal key value in two schemes
+    is two groups, not one."""
     df = spark.createDataFrame(
-        [(2, 1, "x"), (1, 2, "a"), (3, 3, "b")], ["a", "b", "source"])
-    out = dedup_pairs(canonicalize_pairs(df)).collect()
-    assert len(out) == 1
-    assert (out[0].a, out[0].b, out[0].source) == (1, 2, "a")
+        [("lsh", 7, 1), ("lsh", 7, 2), ("lsh", 8, 1), ("lsh", 8, 2),
+         ("substring", 7, 2), ("substring", 7, 1), ("substring", 9, 3),
+         ("pigeonhole", 7, 3)], ["source", "key", "id"])
+    out = blocked_pairs(df, "id", WddConfig(huge_group_rows=None))
+    assert out.columns == ["a", "b", "source"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(1, 2, "lsh"), (1, 2, "substring")]
 
 
 def test_exact_dup_edges_star(spark):

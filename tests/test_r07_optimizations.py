@@ -181,21 +181,20 @@ def test_cc_labels_identical_across_checkpoint_cadence(spark, monkeypatch):
 
 
 def test_lazy_pipeline_releases_checkpointed_edge_frames(spark, sf_dir):
-    """§15 guard: the lazy pipeline's four near-dup edge stages are
-    localCheckpoint(eager=False)-ed inside their builders (so the
-    candidate-union tree is planned from RDD leaves, not six full
-    lineages), and release() must drop those checkpoint blocks along with
+    """§15 guard: the lazy pipeline's blocked and embedding edge stages
+    are localCheckpoint(eager=False)-ed inside their builders (so the
+    candidate-union tree is planned from RDD leaves, not full lineages), and release() must drop those checkpoint blocks along with
     the persisted caches — the run's scope holds nothing afterwards."""
     from wdd.pipeline import run_dedup_pipeline
     from wdd.sources.pages import synth_pages
     pages, _ = synth_pages(spark, sf_dir, with_truth=False)
     res = run_dedup_pipeline(spark, pages.limit(150))
     # edge frames are (a, b, source, score); CC, finished on the driver,
-    # keeps no checkpoint of its own. lsh, pigeonhole and substring: these
-    # pages carry no embeddings
+    # keeps no checkpoint of its own. One frame, the blocked stage's (LSH,
+    # pigeonhole and substring edges): these pages carry no embeddings
     ckpts = [r for df, r in res.scope._held.values()
              if r is not None and "source" in df.columns]
-    assert len(ckpts) >= 3, \
+    assert len(ckpts) == 1, \
         "lazy edge stages no longer register checkpoints"
     res.clusters.select("cluster_id").distinct().count()
     assert res.release() > 0

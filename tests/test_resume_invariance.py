@@ -29,7 +29,7 @@ def test_stage_store_resume(spark, sf_dir, tmp_path):
 
     # every stage has a manifest with rows + config echo
     for stage in ("prep", "signatures", "simhashes", "edges_exact",
-                  "edges_lsh", "edges_pigeonhole", "edges_substring",
+                  "edges_blocked",
                   "candidate_pairs", "clusters"):
         assert store1.exists(stage), stage
         m = store1.manifest(stage)

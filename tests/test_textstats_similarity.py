@@ -212,7 +212,7 @@ def test_substring_block_constants_anchor():
     unreachable), and the short negative-control block must not."""
     import __spark_entry__ as entry
     from wdd.config import DEFAULT
-    from wdd.operators.substring import rolling_anchor_hashes
+    from wdd.kernels.anchors import rolling_anchor_hashes
     block = rolling_anchor_hashes(entry._SUB_BLOCK, DEFAULT.min_overlap_chars,
                                   DEFAULT.anchor_modulus)
     short = rolling_anchor_hashes(entry._SUB_SHORT, DEFAULT.min_overlap_chars,

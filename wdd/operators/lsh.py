@@ -5,9 +5,9 @@ Plan shape (one wide shuffle, everything JVM-side after the signature UDF):
   minhashes(id, signature[128])
     -> band_keys: array of 32 xxhash64(slice(signature, band*4+1, 4), band)
     -> posexplode               (32 rows per doc; narrow)
-    -> groupBy(band, band_key)  (THE shuffle; AQE coalesces/splits skew)
-    -> collect_set(id) -> JVM pair expansion (wdd.operators.pairs)
-    -> canonical pair dedup
+    -> groupBy(source, key)     (THE shuffle; AQE coalesces/splits skew)
+    -> collect_set(id) -> JVM pair expansion + pair dedup
+       (wdd.operators.pairs.blocked_pairs, shared with the other schemes)
 
 With b=32 bands x r=4 rows, the S-curve crosses ~ (1/32)^(1/4) ≈ 0.42
 Jaccard: pairs with J >= 0.8 are caught with prob >= 1-(1-0.8^4)^32 ≈ 1.0
@@ -21,8 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wdd.config import DEFAULT, WddConfig
-from wdd.operators.pairs import (dedup_pairs, jaccard_estimate_col,
-                                 pairs_from_groups_scalable)
+from wdd.operators.pairs import blocked_pairs, jaccard_estimate_col
 
 
 def band_keys_col(sig_col: str, bands: int, rows: int):
@@ -34,11 +33,10 @@ def band_keys_col(sig_col: str, bands: int, rows: int):
     ])
 
 
-def lsh_candidates(minhashes: DataFrame, id_col: str = "page_id",
-                   sig_col: str = "signature",
-                   cfg: WddConfig = DEFAULT,
-                   cache_token: str | None = None) -> DataFrame:
-    """Candidate pairs (a, b, source='lsh') from LSH banding."""
+def band_keyed(minhashes: DataFrame, id_col: str = "page_id",
+               sig_col: str = "signature",
+               cfg: WddConfig = DEFAULT) -> DataFrame:
+    """LSH's (source='lsh', key, id) rows: one per band of each signature."""
     # single 64-bit group key: the band index is already salted INTO the
     # hash (band_keys_col), so a separate band column would only repeat it —
     # dropping it cuts the exploded table (the stage's shuffle payload) from
@@ -51,17 +49,20 @@ def lsh_candidates(minhashes: DataFrame, id_col: str = "page_id",
     # Connectivity (cluster recall) is preserved either way; if PAIR recall
     # SLOs tighten at 10^9+ docs, widen the key to (band, hash) two-column
     # form at the cost of ~1.5x shuffle payload.
-    exploded = (
-        minhashes
-        .select(id_col, F.explode(
-            band_keys_col(sig_col, cfg.lsh_bands, cfg.lsh_rows)
-        ).alias("band_key"))
-    )
-    pairs = pairs_from_groups_scalable(
-        exploded, ["band_key"], id_col,
-        cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,
-        source="lsh", cache_token=cache_token)
-    return dedup_pairs(pairs)
+    return minhashes.select(
+        F.lit("lsh").alias("source"),
+        F.explode(band_keys_col(sig_col, cfg.lsh_bands, cfg.lsh_rows))
+        .alias("key"),
+        id_col)
+
+
+def lsh_candidates(minhashes: DataFrame, id_col: str = "page_id",
+                   sig_col: str = "signature",
+                   cfg: WddConfig = DEFAULT,
+                   cache_token: str | None = None) -> DataFrame:
+    """Candidate pairs (a, b, source='lsh') from LSH banding."""
+    return blocked_pairs(band_keyed(minhashes, id_col, sig_col, cfg), id_col,
+                         cfg, cache_token)
 
 
 def verify_jaccard(pairs: DataFrame, minhashes: DataFrame,

@@ -1,16 +1,20 @@
-"""Candidate-pair primitives: in-group pair generation, canonicalization,
-JVM-side verification.
+"""Candidate-pair primitives: one keyed blocking pass, in-group pair
+generation, JVM-side verification.
 
-The quadratic step of every candidate source (LSH band groups J1, pigeonhole
-block groups J2, exact-digest groups J3, anchor groups) is expressed as ONE
-shuffle: groupBy(key).agg(sort_array(collect_list(id))) followed by a pure
-JVM `transform`-based combination expansion — no self-join, no second shuffle
-of the big side. Skew (SURVEY.md §4.2: boilerplate mega-bands; the reference's
-motivating case is twitter.com's 167k captures/year, discover.py:253-254) is
-handled with a group-size cap: groups up to `cap` emit all C(n,2) pairs;
-larger groups emit star(min)+chain edges — linear in group size, preserving
-connectivity through connected components (transitivity), so cluster recall is
-unaffected while the shuffle volume stays bounded.
+Every blocked candidate source (LSH bands J1, pigeonhole blocks J2, substring
+anchors) is one plan over a (source, key, id) table (blocked_pairs): group by
+(source, key), expand each group's pairs, drop repeats. The pipeline unions
+the three schemes' keys and runs it ONCE — one persist, one sizing probe, one
+candidate shuffle; lsh_candidates, pigeonhole_candidates and
+anchor_candidates run it over one scheme's keys. The quadratic step is
+groupBy(key).agg(array_sort(collect_set(id))) and a pure JVM expansion — no
+self-join, no second shuffle of the big side. Skew (SURVEY.md §4.2:
+boilerplate mega-bands; the reference's motivating case is twitter.com's 167k
+captures/year, discover.py:253-254) is handled with a group-size cap: groups
+up to `cap` emit all C(n,2) pairs; larger groups emit star(min)+chain edges —
+linear in group size, preserving connectivity through connected components
+(transitivity), so cluster recall is unaffected while the shuffle volume
+stays bounded.
 """
 
 from __future__ import annotations
@@ -40,14 +44,15 @@ ASSERT_GROUP_MAX = 1_000_000
 
 def pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str,
                       cap: int = DEFAULT.band_group_cap,
-                      source: str | None = None,
                       assert_max_rows: int | None = None) -> DataFrame:
-    """groupBy(group_cols) -> candidate pairs (a, b) with a < b.
+    """groupBy(group_cols) -> candidate pairs (a, b) with a < b. A `source`
+    group column (the scheme of a multi-scheme keyed table) rides along.
 
     One shuffle (the groupBy); expansion + dedup of the pair list is JVM-side.
     assert_max_rows: when set, any group with more distinct ids raises at
     execution time (see ASSERT_GROUP_MAX).
     """
+    keep = [c for c in group_cols if c == "source"]
     grouped = (
         df.groupBy(*group_cols)
         .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
@@ -67,7 +72,7 @@ def pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str,
     # — identical to all-pairs / array_union(star, chain): star covers
     # (ids[0], ids[1]), chain rows start at i>=1, ids are sorted-distinct
     # so no duplicates arise.
-    rows = grouped.select("ids", F.posexplode("ids").alias("_i", "_x"))
+    rows = grouped.select(*keep, "ids", F.posexplode("ids").alias("_i", "_x"))
     partners = F.when(
         F.size("ids") <= cap,
         F.expr("slice(ids, _i + 2, size(ids) - _i - 1)"),
@@ -83,19 +88,14 @@ def pairs_from_groups(df: DataFrame, group_cols: list[str], id_col: str,
             F.lit(f" ids exceeds the huge_group_rows=None guarantee "
                   f"(limit {int(assert_max_rows)}); pass a huge_group_rows "
                   f"bound so mega-groups take the salted star path"))))
-    pairs = (
-        rows.select(F.col("_x").alias("a"), F.explode(partners).alias("b"))
-    )
-    if source is not None:
-        pairs = pairs.withColumn("source", F.lit(source))
-    return pairs
+    return rows.select(*keep, F.col("_x").alias("a"),
+                       F.explode(partners).alias("b"))
 
 
 def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
                                id_col: str,
                                cap: int = DEFAULT.band_group_cap,
                                huge_group_rows: int = 10_000,
-                               source: str | None = None,
                                cache_token: str | None = None) -> DataFrame:
     """pairs_from_groups with mega-group protection (SURVEY.md §4.2).
 
@@ -109,7 +109,9 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
       level 2: star edges salt-min -> min over the whole group
 
     Connectivity (hence connected-component recall) is identical to full
-    pairing; emitted edges are linear in group size.
+    pairing; emitted edges are linear in group size. A `source` group
+    column rides through both levels, so every salted edge keeps the
+    scheme of the group it came from.
 
     Group sizing uses groupBy-count (partial-aggregated) + a BROADCAST
     semi/anti join of the huge keys — huge groups are by definition few, so
@@ -134,7 +136,6 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
         # the guarantee is now VERIFIED in-line: a violating mega-group
         # fails the job loudly instead of silently concentrating a reducer
         return pairs_from_groups(df, group_cols, id_col, cap=cap,
-                                 source=source,
                                  assert_max_rows=ASSERT_GROUP_MAX)
     # the exploded table feeds BOTH the sizing pass and the pair pass —
     # cache it instead of recomputing the explode+hash lineage per consumer
@@ -147,8 +148,7 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
              .where(F.col("_gsz") > huge_group_rows))
 
     if sizes.isEmpty():
-        return pairs_from_groups(df, group_cols, id_col, cap=cap,
-                                 source=source)
+        return pairs_from_groups(df, group_cols, id_col, cap=cap)
     # materialize only on the non-empty path: sizes feeds two consumers
     # below (the broadcast key set and the _gsz join); the common case —
     # no huge groups — never pays the checkpoint job
@@ -156,7 +156,7 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
 
     huge_keys = F.broadcast(sizes)
     small = df.join(huge_keys.select(*group_cols), group_cols, "left_anti")
-    out = pairs_from_groups(small, group_cols, id_col, cap=cap, source=source)
+    out = pairs_from_groups(small, group_cols, id_col, cap=cap)
 
     huge = df.join(huge_keys, group_cols)
     huge = huge.withColumn(
@@ -164,39 +164,31 @@ def pairs_from_groups_scalable(df: DataFrame, group_cols: list[str],
                         F.ceil(F.col("_gsz") / huge_group_rows).cast("long")))
     sw = Window.partitionBy(*group_cols, "_salt")
     huge = huge.withColumn("_smin", F.min(id_col).over(sw))
+    keep = [c for c in group_cols if c == "source"]
     lvl1 = (huge.where(F.col(id_col) != F.col("_smin"))
-            .select(F.col("_smin").alias("a"), F.col(id_col).alias("b")))
+            .select(*keep, F.col("_smin").alias("a"), F.col(id_col).alias("b")))
     gmins = huge.groupBy(*group_cols).agg(F.min(id_col).alias("_gmin"))
     lvl2 = (huge.select(*group_cols, "_salt", "_smin")
             .dropDuplicates(group_cols + ["_salt"])
             .join(gmins, group_cols)
             .where(F.col("_smin") != F.col("_gmin"))
-            .select(F.col("_gmin").alias("a"), F.col("_smin").alias("b")))
-    huge_edges = lvl1.union(lvl2).dropDuplicates(["a", "b"])
-    if source is not None:
-        huge_edges = huge_edges.withColumn("source", F.lit(source))
+            .select(*keep, F.col("_gmin").alias("a"), F.col("_smin").alias("b")))
+    huge_edges = lvl1.union(lvl2).dropDuplicates(keep + ["a", "b"])
     return out.unionByName(huge_edges)
 
 
-def canonicalize_pairs(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Ensure a < b and drop self-pairs."""
-    return (
-        df.withColumn("_lo", F.least(a, b))
-        .withColumn("_hi", F.greatest(a, b))
-        .where(F.col("_lo") != F.col("_hi"))
-        .drop(a, b)
-        .withColumnRenamed("_lo", a)
-        .withColumnRenamed("_hi", b)
-    )
-
-
-def dedup_pairs(df: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Global candidate dedup; prefer keeping the strongest source tag."""
-    cols = [c for c in df.columns if c not in (a, b)]
-    if not cols:
-        return df.dropDuplicates([a, b])
-    agg = [F.min(c).alias(c) for c in cols]
-    return df.groupBy(a, b).agg(*agg)
+def blocked_pairs(keyed: DataFrame, id_col: str, cfg=DEFAULT,
+                  cache_token: str | None = None) -> DataFrame:
+    """Distinct candidate pairs (a, b, source) of a (source, key, id_col)
+    table: two ids are a candidate of `source` when they share one of its
+    keys. Groups are (source, key), so equal keys of different schemes
+    never meet; a pair several keys of one scheme find is kept once. The
+    table is persisted once for the sizing probe and the expansion
+    (pairs_from_groups_scalable)."""
+    pairs = pairs_from_groups_scalable(
+        keyed, ["source", "key"], id_col, cap=cfg.band_group_cap,
+        huge_group_rows=cfg.huge_group_rows, cache_token=cache_token)
+    return pairs.dropDuplicates(["source", "a", "b"]).select("a", "b", "source")
 
 
 def jaccard_estimate_col(sig_a: str, sig_b: str) -> Column:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
 from wdd.config import DEFAULT, WddConfig
-from wdd.operators.pairs import dedup_pairs, pairs_from_groups_scalable
+from wdd.operators.pairs import blocked_pairs
 
 
 def block_keys_col(sim_col: str, n_blocks: int, bits: int):
@@ -42,41 +42,46 @@ def block_keys_col(sim_col: str, n_blocks: int, bits: int):
     ])
 
 
+def block_keyed(simhashes: DataFrame, sim_col: str, id_col: str,
+                cfg: WddConfig = DEFAULT) -> DataFrame:
+    """Pigeonhole's (source='pigeonhole', key, id) rows, one per block of
+    each simhash: block_keys_col for a long (f=64), parts_block_keys_col
+    for an array<long> of f/64 words."""
+    parts = isinstance(simhashes.schema[sim_col].dataType, ArrayType)
+    keys = parts_block_keys_col if parts else block_keys_col
+    return simhashes.select(
+        F.lit("pigeonhole").alias("source"),
+        F.explode(keys(sim_col, cfg.n_blocks, cfg.simhash_size)).alias("key"),
+        id_col)
+
+
+def hamming_col(a: str, b: str, parts: bool, cfg: WddConfig = DEFAULT):
+    """Hamming distance between simhash columns a and b: one bit_count for
+    longs, the unrolled per-word sum for array<long> words (parts)."""
+    if not parts:
+        return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+    n_words, rest = divmod(cfg.simhash_size, 64)
+    return hamming_parts_col(a, b, None if rest else n_words)
+
+
 def pigeonhole_candidates(simhashes: DataFrame, id_col: str = "simhash64",
                           cfg: WddConfig = DEFAULT,
                           cache_token: str | None = None) -> DataFrame:
     """Candidate (a, b) pairs of DISTINCT simhash values within Hamming k.
 
-    Input: any DataFrame with a simhash column; distinct is taken here. A
-    long column (f=64) is split by block_keys_col and verified by one
-    bit_count; an array<long> column of f/64 little-endian words (f > 64)
-    by parts_block_keys_col and hamming_parts_col. Either way the plan is
-    distinct values, one explode, one groupBy shuffle, codegen Hamming
-    verify (Spark arrays of longs group, sort and join like scalars).
-    Output columns a, b are simhash values of the input's type, verified
-    within Hamming k, with a < b (lexicographically for arrays)."""
+    Input: any DataFrame with a simhash column; distinct is taken here. The
+    plan is distinct values, one explode (block_keyed), one groupBy shuffle
+    (blocked_pairs), codegen Hamming verify (hamming_col; Spark arrays of
+    longs group, sort and join like scalars). Output columns a, b are
+    simhash values of the input's type, verified within Hamming k, with
+    a < b (lexicographically for arrays)."""
     parts = isinstance(simhashes.schema[id_col].dataType, ArrayType)
     distinct = (simhashes.select(F.col(id_col).alias("sim"))
                 .where(F.col("sim").isNotNull())   # extraction-failed pages
                 .dropDuplicates(["sim"]))
-    keys = parts_block_keys_col if parts else block_keys_col
-    exploded = distinct.select(
-        "sim",
-        F.explode(keys("sim", cfg.n_blocks, cfg.simhash_size))
-        .alias("block_key"),
-    )
-    pairs = pairs_from_groups_scalable(
-        exploded, ["block_key"], "sim",
-        cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,
-        source="pigeonhole", cache_token=cache_token)
-    if parts:
-        n_words = (cfg.simhash_size // 64
-                   if cfg.simhash_size % 64 == 0 and cfg.simhash_size >= 64
-                   else None)
-        distance = hamming_parts_col("a", "b", n_words)
-    else:
-        distance = F.bit_count(F.col("a").bitwiseXOR(F.col("b")))
-    return dedup_pairs(pairs.where(distance <= cfg.hamming_k))
+    pairs = blocked_pairs(block_keyed(distinct, "sim", "sim", cfg), "sim",
+                          cfg, cache_token)
+    return pairs.where(hamming_col("a", "b", parts, cfg) <= cfg.hamming_k)
 
 
 def hamming_parts_col(a: str, b: str, n_words: int | None = None):

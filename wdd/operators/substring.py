@@ -16,7 +16,8 @@ index, the same shape as the LSH plan, so it scales like any other equi-join:
      repeats by construction. The batch pipeline gets them from the fused
      signature UDF (one Python round per digest); given a text column
      instead, the `anchors` Arrow UDF here computes them.
-  2. explode -> groupBy(anchor) -> JVM pair expansion (one shuffle).
+  2. explode -> groupBy(source, anchor) -> JVM pair expansion (one
+     shuffle: pairs.blocked_pairs, shared with LSH and pigeonhole).
   3. verify: join both texts per candidate pair and compute the true longest
      common substring with a numpy suffix array + Kasai LCP inside
      applyInPandas (grouped by a pair-bucket key so each Python task gets a
@@ -35,8 +36,8 @@ from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import ArrayType, LongType
 
 from wdd.config import DEFAULT, WddConfig
-from wdd.kernels.anchors import batch_anchor_hashes, rolling_anchor_hashes  # noqa: F401
-from wdd.operators.pairs import dedup_pairs, pairs_from_groups_scalable
+from wdd.kernels.anchors import batch_anchor_hashes
+from wdd.operators.pairs import blocked_pairs
 from wdd.scope import scope_for
 
 
@@ -48,10 +49,10 @@ def _make_anchor_udf(L: int, q: int):
     return anchors_udf
 
 
-def anchor_candidates(docs: DataFrame, id_col: str, text_col: str,
-                      cfg: WddConfig = DEFAULT,
-                      cache_token: str | None = None) -> DataFrame:
-    """Candidate pairs of docs sharing >=1 exact L-char anchored window.
+def anchor_keyed(docs: DataFrame, id_col: str, text_col: str,
+                 cfg: WddConfig = DEFAULT) -> DataFrame:
+    """The substring scheme's (source='substring', key, id) rows: one per
+    anchor of each doc.
 
     text_col is picked by its type: an array<long> column holds each doc's
     anchors already (the fused signature UDF's `anchors` field, computed
@@ -63,12 +64,17 @@ def anchor_candidates(docs: DataFrame, id_col: str, text_col: str,
                                    cfg.anchor_modulus)(anchors)
     # batch_anchor_hashes returns each doc's anchors sorted and distinct, so
     # (id, anchor) rows are already distinct — no dedup shuffle needed here
-    exploded = docs.select(F.col(id_col), F.explode(anchors).alias("anchor"))
-    pairs = pairs_from_groups_scalable(
-        exploded, ["anchor"], id_col,
-        cap=cfg.band_group_cap, huge_group_rows=cfg.huge_group_rows,
-        source="substring", cache_token=cache_token)
-    return dedup_pairs(pairs)
+    return docs.select(F.lit("substring").alias("source"),
+                       F.explode(anchors).alias("key"), id_col)
+
+
+def anchor_candidates(docs: DataFrame, id_col: str, text_col: str,
+                      cfg: WddConfig = DEFAULT,
+                      cache_token: str | None = None) -> DataFrame:
+    """Candidate pairs (a, b, source='substring') of docs sharing >=1 exact
+    L-char anchored window (anchor_keyed)."""
+    return blocked_pairs(anchor_keyed(docs, id_col, text_col, cfg), id_col,
+                         cfg, cache_token)
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,10 @@ Spark equivalent of the reference's whole task lifecycle (SURVEY.md §3.1):
 
   pages --digest--> distinct digests --ONE fused Arrow UDF (text, simhash,
   minhash, substring anchors)--> per-digest signatures --join back-->
-  page-level simhashes table; near-dup edges between digest reps from
-  {samesim, LSH J1, pigeonhole J2, embedding, substring} --> connected
+  page-level simhashes table; near-dup edges between digest reps from two
+  concurrent stages plus samesim: edges_blocked (LSH J1, pigeonhole J2 and
+  substring anchors as ONE keyed table, one sizing probe, one pair
+  expansion, one verify join) and edges_embedding --> connected
   components J4 --> clusters (pages sharing a digest share their rep's
   label; the exact J3 edges go to candidate_pairs only).
 
@@ -31,7 +33,8 @@ from wdd.operators import dedup as D
 from wdd.operators import lsh as L
 from wdd.operators import pigeonhole as P
 from wdd.operators.components import connected_components
-from wdd.operators.substring import substring_candidates
+from wdd.operators.pairs import blocked_pairs, jaccard_estimate_col
+from wdd.operators.substring import anchor_keyed
 from wdd.scope import _SCOPES, RunScope
 
 # content bytes per signature-UDF partition: the fused UDF's tasks are sized
@@ -136,7 +139,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # -- stage: per-digest signatures (the UDF hot path, A6 rewrite).
     # ONE fused Arrow round: content -> struct(text, sim, signature,
     # anchors), from html or from a text-only table's text alike; it is the
-    # run's only Python round per digest (the substring stage explodes the
+    # run's only Python round per digest (the blocked stage explodes the
     # anchors computed here). The earlier two-step plan
     # (extract materialized, then hash UDFs) shipped the token-weight
     # features map out of Python and straight back in — the largest Arrow
@@ -239,41 +242,51 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             .select("a", "b", "source", "score")
         samesim_edges = mat("edges_samesim", samesim_edges)
 
-    # The four near-dup edge frames are kept with scope.checkpoint:
+    # The blocked and embedding edge frames are kept with scope.checkpoint:
     # localCheckpoint(eager=False) adds NO job, but its toRdd
     # call plans the stage's lineage HERE — inside the stage's
     # concurrently-running builder thread — and hands every consumer an RDD
-    # leaf. Without it the candidate-union tree (six edge lineages) was
-    # Catalyst-planned SERIALLY at the CC entry checkpoint: a measured
-    # 4.1-6.9 s per headline rep. Only these four opt in (deep plans, few
-    # rows — verified candidate pairs); exact and samesim stay streaming
-    # (shallow plans, page-scale rows, so an extra materialized copy would
-    # cost real memory).
+    # leaf. Without it the candidate-union tree was Catalyst-planned
+    # SERIALLY at the CC entry checkpoint: a measured 4.1-6.9 s per headline
+    # rep. Only these two opt in (deep plans, few rows — verified candidate
+    # pairs); exact and samesim stay streaming (shallow plans, page-scale
+    # rows, so an extra materialized copy would cost real memory).
 
-    # -- stage: LSH band candidates + Jaccard verification (J1, J5) --------
-    def _lsh_stage() -> DataFrame:
-        with scope.stage("edges_lsh"):
-            lsh_cand = L.lsh_candidates(nd_reps, id_col="rep",
-                                        sig_col="signature",
-                                        cfg=cfg, cache_token=token)
-            lsh_edges = L.verify_jaccard(
-                lsh_cand, reps.select("rep", "signature"),
-                id_col="rep", sig_col="signature",
-                threshold=cfg.jaccard_threshold,
-            ).select("a", "b", "source", "score")
-            return mat("edges_lsh", lsh_edges, scope.checkpoint)
+    # -- stage: blocked candidates — LSH bands (J1, Jaccard-verified J5),
+    # pigeonhole blocks (J2) and substring anchors as ONE plan: a (source,
+    # key, rep) table, one expansion (blocked_pairs: one persist, one sizing
+    # probe, one candidate shuffle) and one verify join against the reps.
+    # Pigeonhole blocks one rep per distinct sim (the min; samesim edges
+    # join reps that share a sim). Anchors cover every rep, null sims too.
+    def _blocked_stage() -> DataFrame:
+        with scope.stage("edges_blocked"):
+            sim_reps = nd_reps.groupBy(sim_col).agg(F.min("rep").alias("rep"))
+            rep_anchors = reps.select("digest", "rep").join(
+                sigs.select("digest", "anchors"), "digest")
+            keyed = (
+                L.band_keyed(nd_reps, "rep", "signature", cfg)
+                .unionByName(P.block_keyed(sim_reps, sim_col, "rep", cfg))
+                .unionByName(anchor_keyed(rep_anchors, "rep", "anchors", cfg)))
+            cand = blocked_pairs(keyed, "rep", cfg, cache_token=token)
 
-    # -- stage: Hamming pigeonhole candidates (J2) --------------------------
-    def _pigeonhole_stage() -> DataFrame:
-        with scope.stage("edges_pigeonhole"):
-            sim_pairs = P.pigeonhole_candidates(
-                nd_reps, id_col=sim_col, cfg=cfg, cache_token=token)
-            ph_edges = P.simhash_pairs_to_page_pairs(
-                sim_pairs, nd_reps, id_col="rep", sim_col=sim_col
-            ).withColumn(
-                "score", F.lit(None).cast("double")
-            ).select("a", "b", "source", "score")
-            return mat("edges_pigeonhole", ph_edges, scope.checkpoint)
+            def end(x: str) -> DataFrame:
+                return reps.select(F.col("rep").alias(x),
+                                   F.col(sim_col).alias(f"_sim_{x}"),
+                                   F.col("signature").alias(f"_sig_{x}"))
+            source = F.col("source")
+            jaccard = jaccard_estimate_col("_sig_a", "_sig_b")
+            hamming = P.hamming_col("_sim_a", "_sim_b",
+                                    sim_col == "sim_parts", cfg)
+            keep = (F.when(source == "lsh", jaccard >= cfg.jaccard_threshold)
+                    .when(source == "pigeonhole", hamming <= cfg.hamming_k)
+                    .otherwise(True))
+            score = (F.when(source == "lsh", jaccard)
+                     .when(source == "substring",
+                           F.lit(float(cfg.min_overlap_chars))))
+            edges = (cand.join(end("a"), "a").join(end("b"), "b")
+                     .where(keep)
+                     .select("a", "b", "source", score.alias("score")))
+            return mat("edges_blocked", edges, scope.checkpoint)
 
     # -- stage: embedding-cosine candidates (optional — semantic/paraphrase
     # duplicates invisible to every token-level source). Activates when the
@@ -336,44 +349,26 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
                                 scope.checkpoint)
         return emb_edges
 
-    # -- stage: substring-overlap candidates (anchor hashing): the anchors
-    # came out of the fused signature UDF, so this stage is JVM-only: one
-    # narrow per-digest join puts each rep id on its digest's anchors ----
-    def _substring_stage() -> DataFrame:
-        with scope.stage("edges_substring"):
-            rep_anchors = reps.select("digest", "rep").join(
-                sigs.select("digest", "anchors"), "digest")
-            sub_edges = substring_candidates(
-                rep_anchors, id_col="rep", text_col="anchors", cfg=cfg,
-                cache_token=token,
-            ).select("a", "b", "source", "score")
-            return mat("edges_substring", sub_edges, scope.checkpoint)
-
-    # The four near-dup candidate sources are independent given the shared
+    # The blocked and embedding stages are independent given the shared
     # persisted frames (prep/sigs/reps/simhashes), but each blocks the
-    # driver mid-build: the mega-group sizing probe (pairs.py sizes.isEmpty)
-    # per candidate source, plus the embedding stage's sizing aggregate.
-    # Run them as CONCURRENT driver jobs (guide §2.6): Spark's scheduler
-    # runs several jobs at once inside one application, so each probe's
-    # tasks back-fill the executor slots another probe's tail leaves idle
-    # instead of serializing four driver round trips — measured 5.5-7 s of
-    # serial edge-stage wall at sf0.1 collapsing to ~max of the legs.
-    # Shared lazily-persisted frames are computed once under the block
-    # manager's per-partition cache locks regardless of which job touches
-    # them first; results and the union order below are deterministic.
-    # FIFO scheduling keeps the first-submitted (heaviest) stage preferred.
+    # driver mid-build: the blocked stage's sizing probe (pairs.py
+    # sizes.isEmpty) and the embedding stage's sizing aggregate. Run them as
+    # CONCURRENT driver jobs so one probe's tasks back-fill the slots the
+    # other's tail leaves idle (in sequence, batch-x1 on 4 CPUs fell from
+    # ~22 to ~18 pages/s). Shared lazily-persisted frames are
+    # computed once under the block manager's per-partition cache locks;
+    # results and the union order below are deterministic.
     from concurrent.futures import ThreadPoolExecutor
-    stage_fns = [_lsh_stage, _pigeonhole_stage]
+    stage_fns = [_blocked_stage]
     if "embedding" in pages.columns:
         stage_fns.append(_embedding_stage)
-    stage_fns.append(_substring_stage)
     with ThreadPoolExecutor(max_workers=len(stage_fns)) as pool:
         futures = [pool.submit(fn) for fn in stage_fns]
         results = [f.result() for f in futures]
-    lsh_edges, ph_edges, sub_edges = results[0], results[1], results[-1]
-    emb_edges = results[2] if "embedding" in pages.columns else None
+    blocked_edges = results[0]
+    emb_edges = results[1] if len(results) > 1 else None
 
-    # Candidate stages above persisted their exploded tables (pairs.py) for
+    # The candidate stages above persisted their keyed tables (pairs.py) for
     # the sizing+pair double read; once the edge frames are written to the
     # store those caches are dead weight competing with shuffle memory —
     # drop them. Without a store the edges materialize at the caller's
@@ -386,10 +381,9 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # The page-level view of every edge, for its readers (manifests, tests,
     # diagnostics); CC below does not read it, so without a store nothing
     # computes it unless a caller does.
-    near_dup = [samesim_edges, lsh_edges, ph_edges]
+    near_dup = [samesim_edges, blocked_edges]
     if emb_edges is not None:
         near_dup.append(emb_edges)
-    near_dup.append(sub_edges)
     with scope.stage("candidate_pairs"):
         candidate_pairs = exact_edges.select("a", "b") \
             .withColumn("source", F.lit("exact")) \
@@ -403,7 +397,7 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
 
     # -- stage: connected components (J4) -----------------------------------
     # CC runs on the digest-representative graph ONLY, fed straight from the
-    # five near-dup edge frames: exact-dup star edges never enter it — pages
+    # near-dup edge frames (samesim, blocked, embedding): exact-dup star edges never enter it — pages
     # sharing a digest inherit their rep's label through the digest->rep
     # join below. (A near-dup edge joins reps of two DISTINCT digests, so no
     # near-dup edge is also an exact edge: this is the edge set of
