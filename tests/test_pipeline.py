@@ -1,5 +1,7 @@
 """Planted-truth end-to-end: synthetic pages -> clusters, recall >= 0.99
 (SURVEY.md §5.3; targets from BASELINE.md)."""
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -418,6 +420,32 @@ def test_embedding_stage_plan_has_no_nested_loop_join(spark, sf_dir):
     plan = res.candidate_pairs._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """execution id -> physical plan, from the SQL status store (which
+    the listener fills with the UI off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {e.executionId(): e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.size()))}
+
+
+def test_pipeline_runs_one_python_round(spark, sf_dir):
+    """The fused signature UDF is the batch pipeline's only Python UDF: the
+    embedding stage's sign-LSH codes are JVM expressions, so over a run
+    with embeddings no SQL execution's plan names another `*_udf(`."""
+    pages, _ = synth_pages(spark, sf_dir, with_truth=False,
+                           with_embeddings=True)
+    before = set(_sql_plans(spark))
+    res = run_dedup_pipeline(spark, pages.limit(120))
+    res.clusters.write.format("noop").mode("overwrite").save()
+    res.candidate_pairs.write.format("noop").mode("overwrite").save()
+    plans = [p for i, p in _sql_plans(spark).items() if i not in before]
+    assert any("_bkts" in p for p in plans)  # the embedding stage ran
+    assert {n for p in plans for n in re.findall(r"(\w+_udf)\(", p)} \
+        == {"signatures_udf"}
+    res.release()
 
 
 def test_embedding_column_all_null_skips_stage(spark, sf_dir):

@@ -9,6 +9,7 @@ import struct
 from collections import Counter
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from wdd.kernels import (
@@ -141,23 +142,41 @@ def test_anchor_udf_matches_kernel_with_null_in_batch(spark, sf_dir):
     assert got[-3:] == [[], [], []] and any(got[:-3])
 
 
-def test_multi_bucket_udf_matches_numpy(spark):
-    """The embedding stage's LSH bucket codes equal the same matmul on the
-    driver, for float vectors across several Arrow batches."""
-    dim, bits, tables = 16, 8, 4
+def test_sign_codes_col_matches_numpy(spark):
+    """The embedding LSH codes (JVM expressions) equal the same matmul on
+    the driver, for float vectors across several partitions: the
+    multi-table form the pipeline uses, and the one-table form of
+    lsh_ann_topk at bits=1 and bits=8."""
+    dim = 16
     rng = np.random.Generator(np.random.PCG64(7))
     vecs = rng.standard_normal((40, dim)).astype(np.float32)
     df = spark.createDataFrame(
         [(i, v.tolist()) for i, v in enumerate(vecs)],
         "i int, v array<float>").repartition(3)
-    got = {r.i: r.c for r in df.select(
-        "i", similarity._make_multi_bucket_udf(dim, bits, tables)("v")
-        .alias("c")).collect()}
-    H = np.concatenate([similarity._hyperplanes_seeded(
-        dim, bits, similarity._ANN_SEED + t) for t in range(tables)], axis=1)
-    codes = (((vecs.astype(np.float64) @ H) > 0).reshape(40, tables, bits)
-             @ (1 << np.arange(bits, dtype=np.int64)))
-    assert got == {i: c.tolist() for i, c in enumerate(codes)}
+    for bits, tables in [(8, 4), (1, 1), (8, 1)]:
+        got = {r.i: r.c for r in df.select(
+            "i", similarity.sign_codes_col("v", dim, bits, tables)
+            .alias("c")).collect()}
+        H = np.concatenate([similarity._hyperplanes(
+            dim, bits, similarity._ANN_SEED + t) for t in range(tables)],
+            axis=1)
+        codes = (((vecs.astype(np.float64) @ H) > 0)
+                 .reshape(40, tables, bits)
+                 @ (1 << np.arange(bits, dtype=np.int64)))
+        assert got == {i: c.tolist() for i, c in enumerate(codes)}, \
+            (bits, tables)
+
+
+@pytest.mark.parametrize("bad, size", [(None, "null"), ([1.0, 2.0, 3.0], "3")])
+def test_sign_codes_col_fails_on_bad_vectors(spark, bad, size):
+    """A null vector, or one whose size is not dim, fails the task with a
+    message naming both sizes, even in one batch beside good rows (it
+    would otherwise get no codes, and so silently no candidates)."""
+    rows = [(i, [float(i), 1.0, -1.0, 0.5]) for i in range(5)] + [(5, bad)]
+    df = spark.createDataFrame(rows, "i int, v array<float>").coalesce(1)
+    with pytest.raises(Exception,
+                       match=f"need 4-dim vectors, got size {size}"):
+        df.select(similarity.sign_codes_col("v", 4, 8, 2)).collect()
 
 
 def test_fused_signatures_matches_separate_udfs(spark, sf_dir):

@@ -7,23 +7,21 @@ Two paths:
     (broadcast the queries, one pass over the corpus, partial top-k per
     partition via the window after AQE coalesce).
   * `lsh_ann_topk` — the scale path: random-hyperplane (sign) LSH buckets.
-    Signatures come from one numpy matmul per Arrow batch (hyperplanes are
-    seeded module state, identical on every executor); candidates are
-    bucket-equi-joined (multiprobe over single-bit flips optional), then
-    exactly re-ranked with the same cosine expression. At 100 TB the bucket
-    join replaces the O(Q x N) cross product with O(Q x N / 2^bits) expected
-    work, the same equi-join shape Catalyst already optimizes.
+    Codes come from `sign_codes_col`, JVM expressions over one literal of
+    seeded hyperplanes (identical on every executor; no Python round);
+    candidates are bucket-equi-joined (multiprobe over single-bit flips
+    optional), then exactly re-ranked with the same cosine expression. At
+    100 TB the bucket join replaces the O(Q x N) cross product with
+    O(Q x N / 2^bits) expected work, the same equi-join shape Catalyst
+    already optimizes.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf, pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
 from wdd.scope import scope_for
 
@@ -43,7 +41,7 @@ def _norm_col(vec: str):
                               lambda acc, x: acc + x.cast("double") * x))
 
 
-def dot_col(a: str, b: str):
+def dot_col(a: str | Column, b: str | Column):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y),
                        F.lit(0.0), lambda acc, x: acc + x)
 
@@ -116,15 +114,15 @@ def cosine_dup_pairs(corpus: DataFrame, threshold: float,
         raise ValueError(f"unknown method {method!r}")
     if dim is None:
         raise ValueError("method='lsh' requires dim")
-    bucket = _make_multi_bucket_udf(dim, bits, tables)
     keyed = corpus.select(F.col(id_col).alias("_id"),
-                          bucket(vec_col).alias("_bkts"))
-    # the bucket-UDF output feeds BOTH candidate sides (build + probe);
-    # un-pinned, the plan carries two ArrowEvalPython evaluations of the
-    # same numpy matmul over the whole corpus (guide §1.2: don't compute
-    # twice). Persist the (id, codes) keys — tables longs per vector, the
-    # lightweight proxy, never the vectors — evictable and released through
-    # the caller's cache_token (the pipeline's run-scoped release).
+                          sign_codes_col(vec_col, dim, bits, tables)
+                          .alias("_bkts"))
+    # the codes feed BOTH candidate sides (build + probe); un-pinned, each
+    # side evaluates tables*bits*dim interpreted multiply-adds per vector
+    # over the whole corpus (guide §1.2: don't compute twice). Persist the
+    # (id, codes) keys — tables longs per vector, the lightweight proxy,
+    # never the vectors — evictable and released through the caller's
+    # cache_token (the pipeline's run-scoped release).
     keyed = scope_for(cache_token).persist(keyed)
     # probe side: own code + every single-bit flip per table; build side:
     # own code only. Key rows are 3 longs — the vectors never ride this
@@ -156,47 +154,36 @@ def cosine_dup_pairs(corpus: DataFrame, threshold: float,
             .select("vec_a", "vec_b", F.round("cosine", 6).alias("cosine")))
 
 
-def _hyperplanes(dim: int, bits: int) -> np.ndarray:
-    rng = np.random.Generator(np.random.PCG64(_ANN_SEED))
-    return rng.standard_normal((dim, bits)).astype(np.float64)
-
-
-def _make_multi_bucket_udf(dim: int, bits: int, tables: int):
-    """array<long> of `tables` bucket codes per vector — one numpy matmul
-    per Arrow batch against all tables' hyperplanes at once (seeded module
-    state, identical on every executor)."""
-    H = np.concatenate([_hyperplanes_seeded(dim, bits, _ANN_SEED + t)
-                        for t in range(tables)], axis=1)  # (dim, tables*bits)
-    weights = (1 << np.arange(bits, dtype=np.int64))
-
-    @arrow_udf(ArrayType(LongType()))
-    def multi_bucket_udf(vecs: pa.Array) -> pa.Array:
-        n = len(vecs)
-        M = vecs.flatten().to_numpy(zero_copy_only=False) \
-            .astype(np.float64).reshape(n, dim)
-        signs = (M @ H) > 0                                # (n, tables*bits)
-        codes = signs.reshape(n, tables, bits) @ weights   # (n, tables)
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * tables),
-            pa.array(codes.astype(np.int64).reshape(-1)))
-    return multi_bucket_udf
-
-
-def _hyperplanes_seeded(dim: int, bits: int, seed: int) -> np.ndarray:
+def _hyperplanes(dim: int, bits: int, seed: int = _ANN_SEED) -> np.ndarray:
     rng = np.random.Generator(np.random.PCG64(seed))
     return rng.standard_normal((dim, bits)).astype(np.float64)
 
 
-def _make_sign_bucket_udf(dim: int, bits: int):
-    H = _hyperplanes(dim, bits)
+def sign_codes_col(vec_col: str, dim: int, bits: int, tables: int):
+    """array<long> of `tables` sign-LSH codes per vector, as JVM
+    expressions: bit i of code t is 1 when the vector's dot product with
+    hyperplane t*bits+i is > 0, and table t's hyperplanes are seeded
+    `_ANN_SEED + t` (identical on every executor). All hyperplanes ride the
+    plan as ONE array<double> literal, hyperplane j at [j*dim, (j+1)*dim);
+    each dot product is `dot_col`'s fold over its slice, and each code is
+    folded from its top bit. A null vector, or one whose size is not `dim`,
+    fails the task rather than getting codes (or none)."""
+    planes = F.lit(np.concatenate(
+        [_hyperplanes(dim, bits, _ANN_SEED + t) for t in range(tables)],
+        axis=1).T.reshape(-1))
+    v = F.col(vec_col)
 
-    @pandas_udf(LongType())
-    def bucket_udf(vecs: pd.Series) -> pd.Series:
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        signs = (M @ H) > 0                       # (n, bits)
-        weights = (1 << np.arange(bits, dtype=np.int64))
-        return pd.Series((signs @ weights).astype(np.int64))
-    return bucket_udf
+    def sign(j):
+        return (dot_col(v, F.slice(planes, j * dim + 1, dim)) > 0).cast("long")
+
+    codes = F.transform(
+        F.sequence(F.lit(0), F.lit(tables - 1)),
+        lambda t: F.aggregate(F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1)),
+                              F.lit(0).cast("long"),
+                              lambda acc, i: acc * 2 + sign(t * bits + i)))
+    return F.when(F.size(v) == dim, codes).otherwise(F.raise_error(
+        F.format_string(f"sign-LSH codes need {dim}-dim vectors, got size %s",
+                        F.when(v.isNotNull(), F.size(v)))))
 
 
 def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int, dim: int,
@@ -208,13 +195,11 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int, dim: int,
     Recall improves with fewer bits (bigger buckets) — bits trades compute
     for recall exactly like IVF nprobe. Single-bit multiprobe on the query
     side (bits+1 probes) keeps recall high at small bucket sizes."""
-    bucket = _make_sign_bucket_udf(dim, bits)
+    code = sign_codes_col(vec_col, dim, bits, 1)[0]   # table 0: _ANN_SEED
     c = corpus.select(F.col(id_col), F.col(vec_col).alias("_cv"),
-                      _norm_col(vec_col).alias("_cn"),
-                      bucket(vec_col).alias("_bkt"))
+                      _norm_col(vec_col).alias("_cn"), code.alias("_bkt"))
     q = queries.select(F.col(qid_col), F.col(vec_col).alias("_qv"),
-                       _norm_col(vec_col).alias("_qn"),
-                       bucket(vec_col).alias("_qbkt"))
+                       _norm_col(vec_col).alias("_qn"), code.alias("_qbkt"))
     # multiprobe: the query's own bucket + every single-bit flip
     probes = F.array(F.col("_qbkt"), *[
         F.col("_qbkt").bitwiseXOR(F.lit(1 << i)) for i in range(bits)

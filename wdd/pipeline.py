@@ -293,11 +293,12 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
     # pages table carries an `embedding` array<float> column (a training-data
     # corpus normally embeds distinct content once upstream). Edges come from
     # the multi-table sign-LSH bucket join + exact cosine re-rank
-    # (similarity.cosine_dup_pairs, the 100 TB path: only (id, table,
-    # bucket) longs ride the candidate shuffle). The per-digest embedding is
-    # derived from a SEPARATE narrow scan of the raw pages — (url, warc_ts,
-    # embedding) ONLY — joined by page_id to the already-computed simhashes
-    # cache for its digest. Neither the content column nor sha1 appears in
+    # (similarity.cosine_dup_pairs, the 100 TB path: codes are JVM
+    # expressions, and only (id, table, bucket) longs ride the candidate
+    # shuffle). The per-digest embedding is derived from a SEPARATE narrow
+    # scan of the raw pages — (url, warc_ts, embedding) ONLY — joined by
+    # page_id to the already-computed simhashes cache for its digest.
+    # Neither the content column nor sha1 appears in
     # this branch: the round-5 form re-ran with_digest on the raw table,
     # which at 100 TB would read and sha1-hash every content byte TWICE
     # (round-5 verdict wrong #1 — measured as most of the 23.7->33.4 s
@@ -323,9 +324,10 @@ def run_dedup_pipeline(spark, pages: DataFrame, cfg: WddConfig = DEFAULT,
             # above runs once
             emb_reps = scope.persist(emb_reps)
             # plan-time constants, from ONE aggregate over the just-pinned
-            # emb_reps (which fills its cache): the LSH hyperplane matrix
-            # shape must be known before the UDF ships, and the auto bucket
-            # width ~log2(n) keeps expected bucket occupancy ~1, so
+            # emb_reps (which fills its cache): the dim sizes the hyperplane
+            # literal that the sign-code expressions read (JVM-side, so
+            # this stage adds no Python round), and the auto bucket width
+            # ~log2(n) keeps expected bucket occupancy ~1, so
             # candidates stay ~n·tables·(bits+1) instead of n²/2^bits — at
             # fixed bits=8, a 2.8k-vector corpus was already verifying 14%
             # of ALL pairs (567k cosines). Identical or re-encoded vectors
